@@ -21,6 +21,8 @@ from vacancy_gpt_etl_pipeline_spark.operators.enrichment import (
 class _FakeLLM(BaseHTTPRequestHandler):
     requests: list[dict] = []
     fail_first = False
+    # the item list follows the last occurrence of this marker
+    sep = "|"
 
     def do_POST(self):
         body = json.loads(self.rfile.read(int(self.headers["Content-Length"])))
@@ -33,7 +35,11 @@ class _FakeLLM(BaseHTTPRequestHandler):
             return
         prompt = body["messages"][0]["text"]
         # echo classification: every item in the prompt's {items} list gets a label
-        items = [s.strip() for s in prompt.split("|")[-1].split(",") if s.strip()]
+        items = [
+            s.strip()
+            for s in prompt.split(type(self).sep)[-1].split(",")
+            if s.strip()
+        ]
         payload = {
             "result": {
                 "alternatives": [
@@ -41,7 +47,15 @@ class _FakeLLM(BaseHTTPRequestHandler):
                         "message": {
                             "text": "```json\n"
                             + json.dumps(
-                                [{"original": k, "normalized_title": f"T:{k}"} for k in items],
+                                [
+                                    {
+                                        "original": k,
+                                        "normalized_title": f"T:{k}",
+                                        "category": f"C:{k}",
+                                        "specialization": f"S:{k}",
+                                    }
+                                    for k in items
+                                ],
                                 ensure_ascii=False,
                             )
                             + "\n```"
@@ -64,6 +78,7 @@ class _FakeLLM(BaseHTTPRequestHandler):
 def llm_server():
     _FakeLLM.requests = []
     _FakeLLM.fail_first = False
+    _FakeLLM.sep = "|"
     srv = HTTPServer(("127.0.0.1", 0), _FakeLLM)
     t = threading.Thread(target=srv.serve_forever, daemon=True)
     t.start()
@@ -119,3 +134,30 @@ def test_unreachable_endpoint_stubs_totally():
         ["x"], e_down, max_retries=1, defaults={"normalized_title": UNDEFINED}, sleep_s=0
     )
     assert rows == [{"original": "x", "normalized_title": UNDEFINED}]
+
+
+@pytest.mark.parametrize("which", ["title", "field"])
+def test_cli_http_templates_resolve_keys(llm_server, which):
+    """The ``--enricher http`` prompt templates take the ``{items}``
+    placeholder ``respond`` supplies; a round trip through the stub
+    resolves every key instead of falling back to the stub label."""
+    from vacancy_gpt_etl_pipeline_spark.__main__ import _http_enrichers
+
+    title, field = _http_enrichers(llm_server, "test-key")
+    e = {"title": title, "field": field}[which]
+    prompt = e.prompt_template.format(items="аналитик, devops", attempt=0)
+    assert prompt.endswith("для: аналитик, devops")
+
+    _FakeLLM.sep = "для: "
+    rows = _process_chunk(
+        ["аналитик", "devops"],
+        e,
+        max_retries=0,
+        defaults={c: UNDEFINED for c in e.output_cols},
+        sleep_s=0,
+    )
+    prefix = {"normalized_title": "T", "category": "C", "specialization": "S"}
+    assert {r["original"]: tuple(r[c] for c in e.output_cols) for r in rows} == {
+        k: tuple(f"{prefix[c]}:{k}" for c in e.output_cols)
+        for k in ("аналитик", "devops")
+    }

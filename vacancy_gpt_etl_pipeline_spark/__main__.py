@@ -107,7 +107,7 @@ def _http_enrichers(api_url: str, api_key: str):
         api_key=api_key,
         prompt_template=(
             "Классифицируй названия вакансий. Верни JSON-массив объектов "
-            '{{"original": ..., "normalized_title": ...}} для: {keys}'
+            '{{"original": ..., "normalized_title": ...}} для: {items}'
         ),
         output_cols=("normalized_title",),
     )
@@ -117,7 +117,7 @@ def _http_enrichers(api_url: str, api_key: str):
         prompt_template=(
             "Классифицируй сферы деятельности. Верни JSON-массив объектов "
             '{{"original": ..., "category": ..., "specialization": ...}} '
-            "для: {keys}"
+            "для: {items}"
         ),
         output_cols=("category", "specialization"),
     )

@@ -21,6 +21,20 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
+def _driver_memory() -> str:
+    """``$SPARK_GRAFT_DRIVER_MEM``, else half the machine's physical
+    RAM capped at 32g: a heap larger than the RAM left to it lets the
+    JVM grow until the kernel's OOM killer takes it, instead of
+    collecting garbage."""
+    if os.environ.get("SPARK_GRAFT_DRIVER_MEM"):
+        return os.environ["SPARK_GRAFT_DRIVER_MEM"]
+    try:
+        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, OSError, ValueError):
+        return "32g"
+    return f"{min(32 * 1024, ram // 2 // 2**20)}m"
+
+
 def get_spark(
     app_name: str = "vacancy-gpt-etl-pipeline-spark",
     cpus: int | None = None,
@@ -42,7 +56,7 @@ def get_spark(
         # 1g — far too small for broadcast builds / cached frames on a big
         # box (found by a 50k-doc scale run OOMing a broadcast). Must be set
         # before JVM launch; on a real cluster spark-submit overrides it.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", _driver_memory())
         .config("spark.sql.shuffle.partitions", str(shuffle))
         # static conf, default 100 generated-class entries: a many-query
         # session (the 47-entry bench registry) evicts the big unrolled

@@ -27,24 +27,7 @@ the batch's working set instead of the whole table. The candidate
 pair list is collected driver-side but is metadata-sized by
 construction: at most 4 bands x 256 prefixes = 1024 values.
 
-Delivery class (r12 advice — exactly-once EFFECTIVE output): a
-committed micro-batch is never replayed (checkpoint), so re-running
-over an unchanged source writes nothing. Within a failed-and-retried
-batch both sinks are idempotent BY KEY rather than append-only:
-
-- survivors overwrite their own ``_batch_id=N`` partition of
-  ``out_path`` (dynamic partition overwrite), so a retry replaces its
-  earlier partial output instead of duplicating it;
-- index rows carry ``_batch_id`` and the gate EXCLUDES the current
-  batch id from its history read, so a retry that crashed after a
-  partial (or complete) index append re-derives the identical
-  survivor set — its own half-written fingerprints can never veto it
-  — and its re-append only duplicates rows within the same batch id,
-  which the gate's distinct/groupBy collapse makes harmless.
-
-Either failure order (output-then-index or index-then-output) therefore
-converges to the same final state on retry; compaction of a long-lived
-index stays the log-compaction pattern of streaming/upsert.py.
+Delivery class, index reads, commit and compaction: streaming/gate.py.
 """
 
 from __future__ import annotations
@@ -57,7 +40,17 @@ from vacancy_gpt_etl_pipeline_spark.operators.phash import (
     phash_bmp,
     phash_incremental,
 )
-from vacancy_gpt_etl_pipeline_spark.streaming.upsert import BATCH_COL
+from vacancy_gpt_etl_pipeline_spark.streaming.gate import (
+    BATCH_COL,
+    band_filter,
+    band_pairs,
+    commit_batch,
+    compact_index,
+    drain,
+    history,
+    read_index,
+    released_checkpoints,
+)
 
 #: On-disk index row schema (band-exploded; ``band_idx``/``pb`` are the
 #: partition columns and come back as int columns on read).
@@ -114,33 +107,10 @@ def index_rows(hashes: DataFrame, batch_id: int) -> DataFrame:
     )
 
 
-def _read_index(spark: SparkSession, index_path: str) -> DataFrame:
-    """The persisted fingerprint index (band-exploded rows), or an
-    empty frame with the index schema before the first batch commits.
-    ONLY the missing-path case is caught — a corrupt or unreadable
-    index must FAIL the batch (gating against a silently-empty history
-    would re-admit every duplicate ever ingested)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.parquet(index_path)
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-            return spark.createDataFrame([], INDEX_SCHEMA)
-        raise
-
-
 def batch_band_pairs(hashes: DataFrame) -> list[tuple[int, int]]:
-    """Distinct ``(band_idx, pb)`` pairs a batch can touch. The collect
-    is metadata-sized by construction: ≤ 4 bands × 256 prefixes = 1024
-    rows regardless of batch size."""
-    rows = (
-        index_rows(hashes, 0)
-        .select("band_idx", "pb")
-        .distinct()
-        .collect()
-    )
-    return [(r["band_idx"], r["pb"]) for r in rows]
+    """Distinct ``(band_idx, pb)`` pairs a batch can touch (≤ 4 bands ×
+    256 prefixes = 1024)."""
+    return band_pairs(index_rows(hashes, 0))
 
 
 def read_index_fingerprints(
@@ -162,21 +132,11 @@ def read_index_fingerprints(
     ``exclude_batch_id`` removes the current batch's own (possibly
     partial) appends from a previous failed attempt — the retry
     idempotence contract."""
-    idx = _read_index(spark, index_path)
-    if pairs is not None:
-        by_band: dict[int, list[int]] = {}
-        for band_idx, pb in pairs:
-            by_band.setdefault(band_idx, []).append(pb)
-        if not by_band:
-            idx = idx.where(F.lit(False))
-        else:
-            pred = None
-            for band_idx, pbs in by_band.items():
-                leg = (F.col("band_idx") == band_idx) & F.col("pb").isin(pbs)
-                pred = leg if pred is None else (pred | leg)
-            idx = idx.where(pred)
-    if exclude_batch_id is not None:
-        idx = idx.where(F.col(BATCH_COL) != F.lit(exclude_batch_id))
+    idx = history(
+        read_index(spark, index_path, INDEX_SCHEMA),
+        None if pairs is None else band_filter(pairs),
+        exclude_batch_id,
+    )
     # fingerprint-level reconstruction: band-exploded rows collapse on
     # the full hash (phash_incremental re-dedups to min-asset reps and
     # re-explodes its own band index, so the operator stays the single
@@ -197,56 +157,25 @@ def apply_phash_gate_batch(
     (tests/test_streaming_phash.py replays the same batch id twice and
     simulates the index-written/output-lost crash order)."""
     spark = batch_df.sparkSession
-    hashes = phash_bmp(batch_df)
-    # localCheckpoint severs lineage: both sinks below reuse the
-    # materialized survivors, and the index append must not re-read
-    # the index being written. DataFrame.unpersist() does NOT free
-    # localCheckpoint blocks — release them by id-diffing
-    # getPersistentRDDs (the operators/tokenize.py trainer pattern),
-    # or a long drain strands one pinned RDD per micro-batch.
-    jsc = spark.sparkContext._jsc
-    before = set(jsc.getPersistentRDDs().keySet().toArray())
-    # hashes feeds two consumers (the pair collect and the gate) — the
-    # checkpoint keeps the Arrow BMP decode single-pass
-    hashes = hashes.localCheckpoint()
-    hist = read_index_fingerprints(
-        spark,
-        index_path,
-        pairs=batch_band_pairs(hashes),
-        exclude_batch_id=batch_id,
-    )
-    survivors = phash_incremental(
-        hashes, hist, max_hamming=max_hamming, max_bucket=max_bucket
-    ).localCheckpoint()
-    new_ids = set(jsc.getPersistentRDDs().keySet().toArray()) - before
-    prev_mode = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "static"
-    )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            survivors.withColumn(
-                BATCH_COL, F.lit(batch_id).cast("long")
-            )
-            .write.mode("overwrite")
-            .partitionBy(BATCH_COL)
-            .parquet(out_path)
+    with released_checkpoints(spark):
+        # hashes feeds two consumers (the pair collect and the gate) —
+        # the checkpoint keeps the Arrow BMP decode single-pass
+        hashes = phash_bmp(batch_df).localCheckpoint()
+        hist = read_index_fingerprints(
+            spark,
+            index_path,
+            pairs=batch_band_pairs(hashes),
+            exclude_batch_id=batch_id,
         )
-        (
-            index_rows(survivors, batch_id)
-            .write.mode("append")
-            .partitionBy("band_idx", "pb")
-            .parquet(index_path)
+        survivors = phash_incremental(
+            hashes, hist, max_hamming=max_hamming, max_bucket=max_bucket
+        ).localCheckpoint()
+        commit_batch(
+            batch_id,
+            out_path,
+            survivors,
+            (index_rows(survivors, batch_id), index_path, ["band_idx", "pb"]),
         )
-    finally:
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", prev_mode
-        )
-        m = jsc.getPersistentRDDs()
-        for rid in new_ids:
-            rdd = m.get(rid)
-            if rdd is not None:
-                rdd.unpersist(False)
 
 
 def write_stream_phash_gate(
@@ -274,50 +203,19 @@ def write_stream_phash_gate(
             max_bucket=max_bucket,
         )
 
-    (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(stream, checkpoint, _batch)
 
 
 def compact_phash_index(
     spark: SparkSession, index_path: str, dest_path: str
 ) -> None:
-    """Log-compaction for a long-lived gate index (the
-    streaming/upsert.py snapshot pattern): retried micro-batches
-    double-append rows within their own batch id, and a years-long
-    drain accumulates them. Compaction rewrites ONE row per logical key
-    — (band_idx, pb, band_val, full hash), keeping the MIN asset_id so
-    the gate's keep-first representative (and therefore every future
-    survivor id) is unchanged — into a NEW immutable directory with the
-    same (band_idx, pb) partitioning. Never in-place: concurrent
-    readers of the old index stay consistent; the caller switches paths
-    between drains (no concurrent writer, like every compactor here).
-    ``_batch_id`` is kept as the MAX contributing batch — by switch
-    time those batches are checkpoint-committed, so own-batch exclusion
-    can never re-fire for them."""
-    (
-        _read_index(spark, index_path)
-        .groupBy("band_idx", "pb", "band_val", "b0", "b1", "b2", "b3")
-        .agg(
-            F.min("asset_id").alias("asset_id"),
-            F.max(BATCH_COL).alias(BATCH_COL),
-        )
-        .select(
-            "asset_id",
-            "b0",
-            "b1",
-            "b2",
-            "b3",
-            "band_val",
-            BATCH_COL,
-            "band_idx",
-            "pb",
-        )
-        .write.mode("error")
-        .partitionBy("band_idx", "pb")
-        .parquet(dest_path)
+    """Compact the index (streaming/gate.py): one row per (band_idx,
+    pb, band_val, full hash), MIN asset_id, same partitioning."""
+    compact_index(
+        spark,
+        index_path,
+        dest_path,
+        INDEX_SCHEMA,
+        ["band_idx", "pb"],
+        id_col="asset_id",
     )

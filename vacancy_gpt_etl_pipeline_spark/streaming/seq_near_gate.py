@@ -23,12 +23,7 @@ the pigeonhole band-sharing guarantee. A micro-batch therefore reads
 only the ≤ ``n_bands × 256`` (band_idx, pb) partitions its own band
 values hash into — the working set, not the corpus.
 
-Delivery class is the family's (phash_gate docstring): checkpointed
-micro-batches never replay; within a retried batch the survivor sink
-overwrites its own ``_batch_id`` partition (dynamic partition
-overwrite) and the index read excludes the current batch id, so both
-crash orders converge. localCheckpoint blocks are freed by id-diffing
-getPersistentRDDs (unpersist() does not free them).
+Delivery class, index reads, commit and compaction: streaming/gate.py.
 """
 
 from __future__ import annotations
@@ -40,7 +35,17 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from vacancy_gpt_etl_pipeline_spark.operators.dedup import seq_near_veto
-from vacancy_gpt_etl_pipeline_spark.streaming.upsert import BATCH_COL
+from vacancy_gpt_etl_pipeline_spark.streaming.gate import (
+    BATCH_COL,
+    band_filter,
+    band_pairs,
+    commit_batch,
+    compact_index,
+    drain,
+    history,
+    read_index,
+    released_checkpoints,
+)
 
 SEQ_COL = "seq"
 
@@ -106,34 +111,12 @@ def index_rows(
     )
 
 
-def _read_index(spark: SparkSession, index_path: str) -> DataFrame:
-    """The persisted index, or an empty typed frame before the first
-    commit. Only the missing-path case is caught — a corrupt index
-    must FAIL the batch (a silently-empty history re-admits every
-    duplicate ever ingested)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.parquet(index_path)
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-            return spark.createDataFrame([], INDEX_SCHEMA)
-        raise
-
-
 def batch_band_pairs(
     seqs: DataFrame, n_bands: int = 3, sep: str = "-"
 ) -> list[tuple[int, int]]:
-    """Distinct ``(band_idx, pb)`` pairs the batch can touch —
-    metadata-sized by construction (≤ n_bands × 256 rows regardless
-    of batch size)."""
-    rows = (
-        index_rows(seqs, 0, n_bands=n_bands, sep=sep)
-        .select("band_idx", "pb")
-        .distinct()
-        .collect()
-    )
-    return [(r["band_idx"], r["pb"]) for r in rows]
+    """Distinct ``(band_idx, pb)`` pairs the batch can touch (≤ n_bands
+    × 256)."""
+    return band_pairs(index_rows(seqs, 0, n_bands=n_bands, sep=sep))
 
 
 def read_index_sequences(
@@ -149,23 +132,11 @@ def read_index_sequences(
     exactly or within the near threshold shares a non-empty band
     value (and its length) with it. ``exclude_batch_id`` removes the
     current batch's own partial appends — the retry contract."""
-    idx = _read_index(spark, index_path)
-    if pairs is not None:
-        by_band: dict[int, list[int]] = {}
-        for band_idx, pb in pairs:
-            by_band.setdefault(band_idx, []).append(pb)
-        if not by_band:
-            idx = idx.where(F.lit(False))
-        else:
-            pred = None
-            for band_idx, pbs in by_band.items():
-                leg = (F.col("band_idx") == band_idx) & F.col("pb").isin(
-                    pbs
-                )
-                pred = leg if pred is None else (pred | leg)
-            idx = idx.where(pred)
-    if exclude_batch_id is not None:
-        idx = idx.where(F.col(BATCH_COL) != F.lit(exclude_batch_id))
+    idx = history(
+        read_index(spark, index_path, INDEX_SCHEMA),
+        None if pairs is None else band_filter(pairs),
+        exclude_batch_id,
+    )
     # sequence-level reconstruction: the gate operator re-derives its
     # own bands (one implementation of the gate semantics)
     return idx.select("asset_id", SEQ_COL)
@@ -189,51 +160,30 @@ def apply_seq_near_gate_batch(
     plain function so retry idempotence is testable without a
     streaming harness."""
     spark = batch_df.sparkSession
-    jsc = spark.sparkContext._jsc
-    before = set(jsc.getPersistentRDDs().keySet().toArray())
-    seqs = fingerprinter(batch_df).localCheckpoint()
-    hist = read_index_sequences(
-        spark,
-        index_path,
-        pairs=batch_band_pairs(seqs, n_bands=n_bands),
-        exclude_batch_id=batch_id,
-    )
-    survivors = seq_near_veto(
-        seqs,
-        hist,
-        SEQ_COL,
-        "asset_id",
-        max_diff=max_diff,
-        n_bands=n_bands,
-        max_bucket=max_bucket,
-    ).localCheckpoint()
-    new_ids = set(jsc.getPersistentRDDs().keySet().toArray()) - before
-    prev_mode = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "static"
-    )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            survivors.withColumn(BATCH_COL, F.lit(batch_id).cast("long"))
-            .write.mode("overwrite")
-            .partitionBy(BATCH_COL)
-            .parquet(out_path)
+    with released_checkpoints(spark):
+        seqs = fingerprinter(batch_df).localCheckpoint()
+        hist = read_index_sequences(
+            spark,
+            index_path,
+            pairs=batch_band_pairs(seqs, n_bands=n_bands),
+            exclude_batch_id=batch_id,
         )
-        (
-            index_rows(survivors, batch_id, n_bands=n_bands)
-            .write.mode("append")
-            .partitionBy("band_idx", "pb")
-            .parquet(index_path)
+        survivors = seq_near_veto(
+            seqs,
+            hist,
+            SEQ_COL,
+            "asset_id",
+            max_diff=max_diff,
+            n_bands=n_bands,
+            max_bucket=max_bucket,
+        ).localCheckpoint()
+        rows = index_rows(survivors, batch_id, n_bands=n_bands)
+        commit_batch(
+            batch_id,
+            out_path,
+            survivors,
+            (rows, index_path, ["band_idx", "pb"]),
         )
-    finally:
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", prev_mode
-        )
-        m = jsc.getPersistentRDDs()
-        for rid in new_ids:
-            rdd = m.get(rid)
-            if rdd is not None:
-                rdd.unpersist(False)
 
 
 def write_stream_seq_near_gate(
@@ -262,13 +212,7 @@ def write_stream_seq_near_gate(
             max_bucket=max_bucket,
         )
 
-    (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(stream, checkpoint, _batch)
 
 
 def audio_fingerprinter(batch_df: DataFrame) -> DataFrame:
@@ -301,19 +245,13 @@ def video_fingerprinter(batch_df: DataFrame) -> DataFrame:
 def compact_seq_near_index(
     spark: SparkSession, index_path: str, dest_path: str
 ) -> None:
-    """Log-compaction for a long-lived index (the streaming/upsert.py
-    snapshot pattern): collapse retried-batch duplicates to one row
-    per (asset_id, band_idx, band_val), keeping the smallest batch id
-    — decisions are preserved because the gate only reads the
-    sequence set."""
-    idx = _read_index(spark, index_path)
-    (
-        idx.groupBy("asset_id", SEQ_COL, "band_val", "band_idx", "pb")
-        .agg(F.min(BATCH_COL).alias(BATCH_COL))
-        .select(
-            "asset_id", SEQ_COL, "band_val", BATCH_COL, "band_idx", "pb"
-        )
-        .write.mode("overwrite")
-        .partitionBy("band_idx", "pb")
-        .parquet(dest_path)
+    """Compact the index (streaming/gate.py): one row per (sequence,
+    band), MIN asset_id, same partitioning."""
+    compact_index(
+        spark,
+        index_path,
+        dest_path,
+        INDEX_SCHEMA,
+        ["band_idx", "pb"],
+        id_col="asset_id",
     )
