@@ -22,6 +22,15 @@ def test_query_unknown_name_is_an_error():
     assert main(["query", "nope", "--sf-dir", "/tmp"], out=buf) == 2
 
 
+@pytest.mark.parametrize("k", ["0", "-1"])
+def test_pipeline_latest_k_below_one_is_an_error(tmp_path, capsys, k):
+    argv = ["pipeline", "--input", str(tmp_path), "--output", str(tmp_path)]
+    with pytest.raises(SystemExit) as exc:
+        main(argv + ["--latest-k", k], out=io.StringIO())
+    assert exc.value.code == 2
+    assert "--latest-k: must be at least 1" in capsys.readouterr().err
+
+
 def test_query_emits_csv_and_jsonl(spark, sf_dir):
     buf = io.StringIO()
     assert (

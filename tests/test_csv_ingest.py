@@ -76,6 +76,15 @@ def test_latest_k_picks_newest_by_name(spark, csv_dir):
     assert suffixes[0] == "vacancies_20240102_000000.csv"
 
 
+@pytest.mark.parametrize("k", [0, -1])
+def test_latest_k_below_one_is_rejected(k):
+    # sorted(paths)[-k:] would read every file for k=0 and drop the
+    # oldest for k=-1
+    files = [f"vacancies_2024010{i}_000000.csv" for i in range(3)]
+    with pytest.raises(ValueError, match="at least 1"):
+        latest_k_paths(files, k=k)
+
+
 def test_read_round_trips_pandas_quoting(spark, csv_dir):
     files = latest_k_paths(list_csv_files(spark, csv_dir), k=1)
     df = read_vacancies_csv(spark, files)

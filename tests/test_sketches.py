@@ -1,10 +1,10 @@
 """Mergeable-sketch quality gates (operators/sketches.py).
 
-The registry entry `sketch_distinct_rollup` is rows-only (DataSketches HLL
-state has no SQL twin), so these tests ARE its correctness story:
-merge-identity (lossless union) and bounded relative error vs the exact
-answer. `sketch_quantiles` is oracle-verified in the exact regime; the
-approx regime (accuracy < group size) is bounded here.
+The registry entries `sketch_distinct_rollup` and `sketch_quantiles` are
+oracle-verified only in the exact regime (DataSketches state has no SQL
+twin), so these tests cover the rest: merge-identity (lossless union) and
+bounded relative error vs the exact answer in the approx regime (accuracy
+< group size).
 """
 
 from __future__ import annotations

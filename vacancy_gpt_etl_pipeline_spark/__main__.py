@@ -9,7 +9,7 @@ workloads without writing a driver script:
     python -m vacancy_gpt_etl_pipeline_spark pipeline \
         --input /data/raw --output /data/processed [--enricher mock|http]
 
-    # any of the 80 registry queries against a parquet table directory
+    # any of the 231 registry queries against a parquet table directory
     python -m vacancy_gpt_etl_pipeline_spark query q1_pricing_summary \
         --sf-dir /root/testdata/sf0.01 --limit 20 --format jsonl
 
@@ -29,6 +29,16 @@ import os
 import sys
 
 
+def _at_least_one(text: str) -> int:
+    try:
+        value = int(text)
+    except ValueError:
+        raise argparse.ArgumentTypeError(f"not an integer: {text!r}") from None
+    if value < 1:
+        raise argparse.ArgumentTypeError(f"must be at least 1, got {value}")
+    return value
+
+
 def _build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(prog="vacancy_gpt_etl_pipeline_spark")
     p.add_argument(
@@ -39,7 +49,12 @@ def _build_parser() -> argparse.ArgumentParser:
     pipe = sub.add_parser("pipeline", help="run the 5-stage reference pipeline")
     pipe.add_argument("--input", required=True, help="raw CSV directory")
     pipe.add_argument("--output", required=True, help="sink directory")
-    pipe.add_argument("--latest-k", type=int, default=4)
+    pipe.add_argument(
+        "--latest-k",
+        type=_at_least_one,
+        default=4,
+        help="read only the newest K input files (K >= 1)",
+    )
     pipe.add_argument("--enricher", choices=("mock", "http"), default="mock")
     pipe.add_argument("--api-url", default=None, help="LLM API endpoint (http)")
     pipe.add_argument(

@@ -31,8 +31,9 @@ Why this shape at 100 TB:
   rows are exactly-once per key — proven under injected first-attempt task
   crashes in tests/test_enrichment_retry_idempotence.py (local[4,2]).
 - The mapping table is bounded by key cardinality → broadcast join back, no
-  shuffle of the big side. For unbounded key spaces pass
-  ``broadcast_mapping=False`` to fall back to a shuffle hash join.
+  shuffle of the big side, while its estimated size fits
+  ``spark.sql.autoBroadcastJoinThreshold``; above that (unbounded key
+  spaces) the join back is a shuffle join.
 """
 
 from __future__ import annotations
@@ -51,6 +52,7 @@ from pyspark.sql import types as T
 
 from vacancy_gpt_etl_pipeline_spark.functions.json_parse import safe_json_parse_text
 from vacancy_gpt_etl_pipeline_spark.functions.scalars import non_empty
+from vacancy_gpt_etl_pipeline_spark.session import parse_size_bytes
 
 # 21-label title taxonomy (dag/vacancy_pipline_gpt_rerty.py:187-209).
 TITLE_TAXONOMY = (
@@ -237,23 +239,8 @@ def _process_chunk(
 
 #: conservative per-cell estimate for the broadcast sizing below — short
 #: labels/flags (the enrichment contract's outputs) average well under
-#: this; long-output enrichers should pass broadcast_mapping=False
+#: this; for long-output enrichers lower autoBroadcastJoinThreshold
 _EST_CELL_BYTES = 64
-
-
-def _parse_size_bytes(value: str) -> int:
-    """``spark.sql.autoBroadcastJoinThreshold`` as bytes: plain ints are
-    bytes; `k`/`m`/`g` (optionally with `b`) suffixes as in Spark's
-    byte-string configs. ``-1``/``0`` mean broadcast disabled."""
-    s = value.strip().lower()
-    mult = 1
-    for suffix, m in (("kb", 1 << 10), ("mb", 1 << 20), ("gb", 1 << 30),
-                      ("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30),
-                      ("b", 1)):
-        if s.endswith(suffix):
-            s, mult = s[: -len(suffix)], m
-            break
-    return int(s) * mult
 
 
 def _mapping_fits_broadcast(spark: SparkSession, n_keys: int, n_cols: int) -> bool:
@@ -265,7 +252,7 @@ def _mapping_fits_broadcast(spark: SparkSession, n_keys: int, n_cols: int) -> bo
     for. Threshold ≤ 0 (broadcast disabled) → shuffle join."""
     try:
         raw = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        threshold = _parse_size_bytes(raw)
+        threshold = parse_size_bytes(raw)
     except Exception:
         threshold = 10 << 20  # Spark's default 10 MB
     return threshold > 0 and n_keys * n_cols * _EST_CELL_BYTES <= threshold
@@ -279,10 +266,8 @@ def enrich_column(
     max_retries: int = 1,
     defaults: dict[str, str] | None = None,
     sleep_s: float = 0.0,
-    broadcast_mapping: bool | None = None,
     empty_key_default: str | None = None,
     max_partitions: int | None = None,
-    partitions_per_slot: int = 4,
     keys_from: DataFrame | None = None,
 ) -> DataFrame:
     """Enrich ``df`` with ``enricher.output_cols`` derived from ``key_col``.
@@ -292,16 +277,14 @@ def enrich_column(
     join back → coalesce defaults. See module docstring for the 100 TB
     rationale.
 
-    ``broadcast_mapping=None`` (default) picks the join-back strategy
-    ADAPTIVELY from the already-counted ``n_keys``: broadcast while the
-    estimated mapping size fits ``spark.sql.autoBroadcastJoinThreshold``,
-    plain shuffle join above it. A static broadcast was the last
-    scale-killer edge here — at 100 M distinct keys the mapping is GBs
-    and a forced broadcast OOMs the driver (r8 verdict). Pass
-    True/False to override the estimate in either direction.
+    The join-back strategy is picked from the already-counted
+    ``n_keys``: broadcast while the estimated mapping size fits
+    ``spark.sql.autoBroadcastJoinThreshold``, plain shuffle join above
+    it. A static broadcast would OOM the driver at 100 M distinct keys,
+    where the mapping is GBs.
 
     The partition count is capped at ``max_partitions`` (default
-    ``partitions_per_slot × defaultParallelism``): one-partition-per-batch
+    ``4 × defaultParallelism``): one-partition-per-batch
     is right while batches ≪ cluster slots, but at 100 M distinct keys it
     would mean millions of tasks — a scheduler killer. ``run()`` re-chunks
     WITHIN each partition, so ``batch_size`` per LLM call is preserved
@@ -341,7 +324,7 @@ def enrich_column(
     else:
         if max_partitions is None:
             max_partitions = max(
-                1, partitions_per_slot * df.sparkSession.sparkContext.defaultParallelism
+                1, 4 * df.sparkSession.sparkContext.defaultParallelism
             )
         n_parts = min(max(1, math.ceil(n_keys / batch_size)), max_partitions)
 
@@ -367,12 +350,9 @@ def enrich_column(
         # once-per-key-per-action (tested in test_enrichment_failures).
         mapping = keys_df.repartition(n_parts).mapInPandas(run, schema=schema).persist()
 
-    if broadcast_mapping is None:
-        broadcast_mapping = _mapping_fits_broadcast(
-            df.sparkSession, n_keys, 1 + len(out_cols)
-        )
+    fits = _mapping_fits_broadcast(df.sparkSession, n_keys, 1 + len(out_cols))
     joined = df.join(
-        F.broadcast(mapping) if broadcast_mapping else mapping,
+        F.broadcast(mapping) if fits else mapping,
         keyed == mapping["original"],
         "left",
     ).drop("original")

@@ -150,7 +150,6 @@ from vacancy_gpt_etl_pipeline_spark.sources.parquet_source import (
     read_table,
     widen_scan,
 )
-from vacancy_gpt_etl_pipeline_spark.session import configure_session
 from vacancy_gpt_etl_pipeline_spark.streaming.windows import (
     session_window_agg,
     sliding_window_agg,
@@ -161,37 +160,13 @@ from vacancy_gpt_etl_pipeline_spark.streaming.windows import (
 @dataclass
 class QuerySpec:
     spark: Callable[[SparkSession, str], DataFrame]
-    oracle: str | None  # None → driver runs rows-only check
+    oracle: str
 
 
 def _dsum(col: str, alias: str, scale: int = 2) -> F.Column:
     """Deterministic sum of a double column via exact decimal arithmetic."""
     return (
         F.sum(F.col(col).cast(f"decimal(18,{scale})")).cast("double").alias(alias)
-    )
-
-
-def _t(
-    spark: SparkSession,
-    sf_dir: str,
-    name: str,
-    widen: bool = False,
-    widen_target: int | None = None,
-) -> DataFrame:
-    """``widen=True`` floors the scan width at executor parallelism
-    (sources/parquet_source.widen_scan) — set it ONLY on reads feeding
-    CPU-dense map work; see widen_scan's docstring for the measured
-    win/loss table. ``widen_target`` bounds the floor (r16: the
-    Arrow/mapInPandas decode entries measured FASTER at 8 than at full
-    width — per-partition worker+batch setup scales with width while
-    8 tasks already keep the decode off the single-core floor; the
-    13-entry A/B table is in OPTIMIZATION_r16.md). The bound is capped
-    at executor parallelism and widen_scan returns the scan unchanged
-    when it is already at least that wide, so production-wide scans
-    are untouched."""
-    configure_session(spark)
-    return read_table(
-        spark, sf_dir, name, widen=widen, widen_target=widen_target
     )
 
 
@@ -255,7 +230,7 @@ _SPEC_CASE = FIELD_ENRICHER.case_sql("source", "specialization")
 def _normalized_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents → the reference's normalized_vacancies shape, via the real
     enrichment operator (distinct → mapInPandas → broadcast join back)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     # batch sizes sized for a high-throughput enricher: each mapInPandas task
     # costs ~60 ms of Arrow/worker overhead, so tiny batches (the reference's
     # LLM-prompt-constrained 15/10) would spend more on task dispatch than
@@ -288,7 +263,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship (A5/F10/P4 composite, TPC-H Q1 shape): filtered scan →
     grouped aggregate. Catalyst pushes the shipdate filter into the parquet
     scan and prunes to 7 columns; AQE coalesces the post-shuffle partitions."""
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_shipdate") < F.lit("2000-01-01"))
+    li = read_table(spark, sf_dir, "lineitem").where(F.col("l_shipdate") < F.lit("2000-01-01"))
     dec = lambda c: F.col(c).cast("decimal(12,2)")  # noqa: E731
     disc_price = dec("l_extendedprice") * (F.lit(1).cast("decimal(12,2)") - dec("l_discount"))
     charge = disc_price * (F.lit(1).cast("decimal(12,2)") + dec("l_tax"))
@@ -326,9 +301,9 @@ ORDER BY l_returnflag, l_linestatus
 def j1_broadcast_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1: small-dim lookup joins planned as BroadcastHashJoin (the Spark
     rewrite of the reference's driver-side dict probe, dag/...py:385-396)."""
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
+    c = read_table(spark, sf_dir, "customer")
+    n = read_table(spark, sf_dir, "nation")
+    r = read_table(spark, sf_dir, "region")
     return (
         c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
@@ -352,8 +327,8 @@ GROUP BY r_name, n_name
 
 def j2_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J2/P7: left-semi membership (dag/...py:590-603)."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").where(F.col("o_totalprice") > 300000)
+    c = read_table(spark, sf_dir, "customer")
+    o = read_table(spark, sf_dir, "orders").where(F.col("o_totalprice") > 300000)
     return c.join(o, c.c_custkey == o.o_custkey, "left_semi").select(
         "c_custkey", "c_name", "c_mktsegment"
     )
@@ -367,8 +342,8 @@ WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_totalprice 
 
 def u2_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """U2: set-difference residue as anti-join (dag/...py:296-302)."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").where(F.col("o_orderpriority") == "1-URGENT")
+    c = read_table(spark, sf_dir, "customer")
+    o = read_table(spark, sf_dir, "orders").where(F.col("o_orderpriority") == "1-URGENT")
     return (
         c.join(o, c.c_custkey == o.o_custkey, "left_anti")
         .groupBy("c_mktsegment")
@@ -386,7 +361,11 @@ GROUP BY c_mktsegment
 def a1_full_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1: dropDuplicates (dag/...py:117-122) — projected to a low-cardinality
     pair so duplicates actually exist in the fixture."""
-    return _t(spark, sf_dir, "orders").select("o_orderstatus", "o_orderpriority").dropDuplicates()
+    return (
+        read_table(spark, sf_dir, "orders")
+        .select("o_orderstatus", "o_orderpriority")
+        .dropDuplicates()
+    )
 
 
 A1_SQL = "SELECT DISTINCT o_orderstatus, o_orderpriority FROM orders"
@@ -395,7 +374,7 @@ A1_SQL = "SELECT DISTINCT o_orderstatus, o_orderpriority FROM orders"
 def a2_keyed_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A2 deterministic variant: keep-first survivor per key under an explicit
     order (dag/...py:125 keep='first' made reproducible)."""
-    o = _t(spark, sf_dir, "orders")
+    o = read_table(spark, sf_dir, "orders")
     latest = dedup_keep_first(
         o, ["o_custkey"], [F.desc("o_orderdate"), F.asc("o_orderkey")]
     )
@@ -420,7 +399,7 @@ def a3_distinct_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup-before-expensive-work contract (dag/...py:159)."""
     from vacancy_gpt_etl_pipeline_spark.operators.relational import distinct_values
 
-    return distinct_values(_t(spark, sf_dir, "part"), "p_type")
+    return distinct_values(read_table(spark, sf_dir, "part"), "p_type")
 
 
 A3_SQL = """
@@ -432,7 +411,7 @@ WHERE p_type IS NOT NULL AND trim(p_type) != ''
 def a4_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A4: Counter → groupBy().count() (dag/...py:406)."""
     return (
-        _t(spark, sf_dir, "events")
+        read_table(spark, sf_dir, "events")
         .groupBy("event_type")
         .agg(F.count("*").alias("cnt"))
     )
@@ -448,7 +427,7 @@ def a6_conditional_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return conditional_success_counts(
-        _t(spark, sf_dir, "orders"), "o_orderstatus", ("F",)
+        read_table(spark, sf_dir, "orders"), "o_orderstatus", ("F",)
     )
 
 
@@ -463,7 +442,7 @@ def w1_ratio_of_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W1/A7: grand-total window over an aggregate (vacancy_analysis.sql:27).
     Single-partition window is safe here: input is group-cardinality-sized."""
     seg = (
-        _t(spark, sf_dir, "customer")
+        read_table(spark, sf_dir, "customer")
         .groupBy("c_mktsegment")
         .agg(F.count("*").alias("cnt"))
     )
@@ -480,8 +459,8 @@ FROM customer GROUP BY c_mktsegment
 def a8_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A8: key → member-list index (dag/...py:149-157), emitted as a sorted
     joined string so the comparison is order-insensitive."""
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
+    s = read_table(spark, sf_dir, "supplier")
+    n = read_table(spark, sf_dir, "nation")
     return (
         s.join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
         .groupBy("n_name")
@@ -504,7 +483,7 @@ def t2_top_k_by_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T2: most_common(k) with total tie-break (dag/...py:409). Plans as
     TakeOrderedAndProject — no global sort."""
     return (
-        _t(spark, sf_dir, "part")
+        read_table(spark, sf_dir, "part")
         .groupBy("p_brand")
         .agg(F.count("*").alias("cnt"))
         .orderBy(F.desc("cnt"), F.asc("p_brand"))
@@ -521,7 +500,7 @@ GROUP BY p_brand ORDER BY cnt DESC, p_brand LIMIT 20
 def t3_order_by_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T3: ORDER BY ... LIMIT (vacancy_analysis.sql:18-19)."""
     return (
-        _t(spark, sf_dir, "orders")
+        read_table(spark, sf_dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
         .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
         .limit(20)
@@ -537,7 +516,7 @@ ORDER BY o_totalprice DESC, o_orderkey LIMIT 20
 def t4_truncated_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T4: ordered sample + 50-char truncation (dag/...py:424-432)."""
     return (
-        _t(spark, sf_dir, "documents")
+        read_table(spark, sf_dir, "documents")
         .orderBy("doc_id")
         .limit(10)
         .select("doc_id", truncate_with_ellipsis("text", 50).alias("sample"))
@@ -553,7 +532,7 @@ FROM documents ORDER BY doc_id LIMIT 10
 
 def u1_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """U1: schema-aligned union (dag/...py:111-115) of two branches."""
-    o = _t(spark, sf_dir, "orders")
+    o = read_table(spark, sf_dir, "orders")
     urgent = o.where(F.col("o_orderpriority") == "1-URGENT")
     high = o.where(F.col("o_orderpriority") == "2-HIGH")
     return (
@@ -577,7 +556,7 @@ FROM (
 def f_scalar_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F1-F12 scalar pack: trim/upper/length/substring/concat/endswith/round.
     ROUND runs on exact decimals (see module docstring)."""
-    p = _t(spark, sf_dir, "part").where(F.col("p_partkey") <= 500)
+    p = read_table(spark, sf_dir, "part").where(F.col("p_partkey") <= 500)
     return p.select(
         "p_partkey",
         F.upper(F.trim("p_name")).alias("name_upper"),
@@ -605,7 +584,7 @@ FROM part WHERE p_partkey <= 500
 
 def f8_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F8: JSON field extraction from the events props column."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     k = F.get_json_object("props", "$.k").cast("int")
     return e.groupBy("event_type").agg(
         F.count(k).alias("n_with_k"),
@@ -623,7 +602,7 @@ FROM events GROUP BY event_type
 
 def f9_date_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F9: timestamp bucketing/formatting (dag/...py:820-822) → monthly revenue."""
-    o = _t(spark, sf_dir, "orders")
+    o = read_table(spark, sf_dir, "orders")
     return (
         o.groupBy(F.date_format("o_orderdate", "yyyy-MM").alias("month"))
         .agg(F.count("*").alias("n_orders"), _dsum("o_totalprice", "revenue"))
@@ -639,7 +618,7 @@ FROM orders GROUP BY 1
 
 def window_rank_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Extension window pack: row_number / lag / lead per user over event time."""
-    e = _t(spark, sf_dir, "events").where(F.col("user_id") < 5)
+    e = read_table(spark, sf_dir, "events").where(F.col("user_id") < 5)
     w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
     return e.select(
         "event_id",
@@ -663,7 +642,7 @@ WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
 def rollup_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hierarchical subtotals (free in Spark, absent in the reference)."""
     return (
-        _t(spark, sf_dir, "orders")
+        read_table(spark, sf_dir, "orders")
         .rollup("o_orderstatus", "o_orderpriority")
         .agg(F.count("*").alias("n"))
         .select(
@@ -683,7 +662,7 @@ FROM orders GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
 
 def cube_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        _t(spark, sf_dir, "lineitem", widen=True)
+        read_table(spark, sf_dir, "lineitem", widen=True)
         .cube("l_returnflag", "l_linestatus")
         .agg(F.count("*").alias("n"), _dsum("l_quantity", "sum_qty"))
         .select(
@@ -706,7 +685,7 @@ FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
 
 def pivot_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot: event-type counts per user (manual CASE oracle)."""
-    e = _t(spark, sf_dir, "events").where(F.col("user_id") < 10)
+    e = read_table(spark, sf_dir, "events").where(F.col("user_id") < 10)
     types = ["click", "error", "purchase", "signup", "view"]
     return (
         e.groupBy("user_id").pivot("event_type", types).count().na.fill(0)
@@ -820,7 +799,7 @@ _TS_FMT_DUCK = "%Y-%m-%d %H:%M:%S"
 
 
 def tumbling_window_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     agg = tumbling_window_agg(e, "ts", "1 hour", ["event_type"], "value")
     return agg.select(
         F.date_format("window_start", _TS_FMT_SPARK).alias("ws"),
@@ -839,7 +818,7 @@ FROM events GROUP BY 1, 2
 
 
 def sliding_window_half_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     agg = sliding_window_agg(e, "ts", "1 hour", "30 minutes", "value")
     return agg.select(
         F.date_format("window_start", _TS_FMT_SPARK).alias("ws"),
@@ -862,7 +841,7 @@ FROM w GROUP BY 1
 
 
 def session_windows_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     agg = session_window_agg(e, "ts", "30 minutes", ["user_id"])
     return agg.select(
         "user_id",
@@ -900,7 +879,7 @@ FROM sessions GROUP BY user_id, sid
 
 
 def dedup_exact_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup_exact_text(_t(spark, sf_dir, "documents"), "text", "doc_id")
+    return dedup_exact_text(read_table(spark, sf_dir, "documents"), "text", "doc_id")
 
 
 DEDUP_EXACT_SQL = """
@@ -926,7 +905,7 @@ def exact_substr_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return exact_substring_dedup(
-        _t(spark, sf_dir, "documents").select("doc_id", "text"),
+        read_table(spark, sf_dir, "documents").select("doc_id", "text"),
         block_tokens=_ESD_K,
     ).orderBy("doc_id")
 
@@ -966,7 +945,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     frequent-shingle skew guard ON (max_shingle_freq=100) — the registered
     configuration is the scale-safe one; the oracle applies the same cap."""
     return ngram_jaccard_pairs(
-        _t(spark, sf_dir, "documents"),
+        read_table(spark, sf_dir, "documents"),
         "text",
         "doc_id",
         n=3,
@@ -1014,7 +993,7 @@ def dedup_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vacancy_gpt_etl_pipeline_spark.operators.dedup import winnowing_pairs
 
     return winnowing_pairs(
-        _t(spark, sf_dir, "documents", widen=True),
+        read_table(spark, sf_dir, "documents", widen=True),
         "text",
         "doc_id",
         k=16,
@@ -1076,7 +1055,7 @@ def range_join_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         interval_join,
     )
 
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     purchases = ev.where(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("purchase_id"),
         "user_id",
@@ -1136,7 +1115,7 @@ def incremental_neardup_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         incremental_neardup,
     )
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     perturbed = docs.where(F.col("doc_id") % 7 == 3).select(
         (F.col("doc_id") + 1_000_000).alias("doc_id"),
         F.concat(
@@ -1224,7 +1203,7 @@ def incremental_dedup_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-deduping history. Oracle reproduces hash, keep-first, and anti-join."""
     from vacancy_gpt_etl_pipeline_spark.operators.dedup import incremental_dedup
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     history = docs.where(F.col("doc_id") < 250)
     plants = history.where(F.col("doc_id") < 50).select(
         (F.col("doc_id") + 900000).alias("doc_id"), "text"
@@ -1265,7 +1244,7 @@ def dedup_cc_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vacancy_gpt_etl_pipeline_spark.operators.graph import dedup_clusters
 
     pairs = ngram_jaccard_pairs(
-        _t(spark, sf_dir, "documents"),
+        read_table(spark, sf_dir, "documents"),
         "text",
         "doc_id",
         n=3,
@@ -1327,7 +1306,7 @@ def dedup_survivor_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     wrapped with the same ranking."""
     from vacancy_gpt_etl_pipeline_spark.operators.graph import dedup_clusters
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     pairs = ngram_jaccard_pairs(
         docs, "text", "doc_id", n=3, threshold=0.5, max_shingle_freq=100
     )
@@ -1376,7 +1355,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     precision/recall vs exact Jaccard is additionally asserted in
     tests/test_neardup_quality.py on a seeded near-dup fixture."""
     return minhash_near_duplicates(
-        _t(spark, sf_dir, "documents"),
+        read_table(spark, sf_dir, "documents"),
         "text",
         "doc_id",
         jaccard_threshold=0.5,
@@ -1479,7 +1458,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     additionally asserted in tests/test_neardup_quality.py. Production
     default stays xxhash64."""
     return simhash_near_duplicates(
-        _t(spark, sf_dir, "documents", widen=True),
+        read_table(spark, sf_dir, "documents", widen=True),
         "text",
         "doc_id",
         max_bucket=128,
@@ -1607,7 +1586,7 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     and identical buckets in SQL, so LSH candidate semantics (not just the
     cosine math) are what's being verified. No crossJoin anywhere: the
     registered plan joins on bucket equality only."""
-    emb = _t(spark, sf_dir, "embeddings", widen=True)
+    emb = read_table(spark, sf_dir, "embeddings", widen=True)
     base = emb.select(
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
@@ -1641,7 +1620,7 @@ WHERE ROUND(list_cosine_similarity(a.e, c.e), 6) >= 0.9
 
 def ann_brute_force(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-10 for query vectors vec_id < 5 (the ANN baseline)."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = read_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -1667,7 +1646,7 @@ def ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate-generation path — not just the cosine scoring — is
     hash-verified; recall vs brute force is additionally asserted in
     tests/test_neardup_quality.py."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = read_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -1716,7 +1695,7 @@ def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     invariant are asserted in tests/test_neardup_quality.py. Lloyd-refined
     centroids (operators/similarity.lloyd_refine) are the production path
     when recall matters more than oracle parity."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = read_table(spark, sf_dir, "embeddings")
     cents = sampled_centroids(emb, _IVF_CELLS, _IVF_STRIDE)
     queries = emb.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
@@ -1779,7 +1758,7 @@ def ann_ivf_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
         knn_ivf_adaptive,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = read_table(spark, sf_dir, "embeddings")
     cents = sampled_centroids(emb, _IVF_CELLS, _IVF_STRIDE)
     queries = emb.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
@@ -1878,7 +1857,7 @@ def ann_ivf_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
         knn_ivf_int8,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = read_table(spark, sf_dir, "embeddings")
     cents = sampled_centroids(emb, _IVF_CELLS, _IVF_STRIDE)
     queries = emb.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
@@ -1967,7 +1946,7 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         knn_ivf_pq,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = read_table(spark, sf_dir, "embeddings")
     cents = sampled_centroids(emb, _IVF_CELLS, _IVF_STRIDE)
     queries = emb.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
@@ -2001,7 +1980,7 @@ def ann_ivf_pq_rescore(spark: SparkSession, sf_dir: str) -> DataFrame:
         knn_ivf_pq,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = read_table(spark, sf_dir, "embeddings")
     cents = sampled_centroids(emb, _IVF_CELLS, _IVF_STRIDE)
     queries = emb.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
@@ -2169,7 +2148,7 @@ def trajectory_similar_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         trajectory_signatures,
     )
 
-    ev = _t(spark, sf_dir, "events").select("user_id", "ts", "value")
+    ev = read_table(spark, sf_dir, "events").select("user_id", "ts", "value")
     sigs = trajectory_signatures(ev)
     queries = sigs.where(F.col("user_id") < 3).select(
         F.col("user_id").alias("query_id"), "signature"
@@ -2234,7 +2213,7 @@ def modal_priority_per_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-defined tie behavior; the explicit (count desc, value) rank
     is deterministic everywhere."""
     counts = (
-        _t(spark, sf_dir, "orders")
+        read_table(spark, sf_dir, "orders")
         .groupBy("o_orderstatus", "o_orderpriority")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -2275,7 +2254,7 @@ def lineage_file_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     paths, and each test table is one physical file — the basename is
     the full lineage at this layout); grouping is one map-side-combined
     aggregate."""
-    orders = _t(spark, sf_dir, "orders").withColumn(
+    orders = read_table(spark, sf_dir, "orders").withColumn(
         "src_file", F.regexp_extract(F.input_file_name(), r"([^/]+)$", 1)
     )
     return (
@@ -2307,7 +2286,7 @@ def ntile_price_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         grouped_ntile,
     )
 
-    orders = _t(spark, sf_dir, "orders").select(
+    orders = read_table(spark, sf_dir, "orders").select(
         "o_orderstatus", "o_orderkey", "o_totalprice"
     )
     deciled = grouped_ntile(
@@ -2350,7 +2329,7 @@ def monthly_revenue_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubles — the whole report hash-matches with no rounding. The
     window runs over the TINY month frame (one row per month), after
     the only fact-sized aggregate."""
-    orders = _t(spark, sf_dir, "orders").select("o_orderdate", "o_totalprice")
+    orders = read_table(spark, sf_dir, "orders").select("o_orderdate", "o_totalprice")
     monthly = orders.groupBy(
         F.date_format("o_orderdate", "yyyy-MM").alias("month")
     ).agg(
@@ -2397,7 +2376,7 @@ def linear_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-units (value/n is an arbitrary double; quantizing BOTH
     engines to 6 dp before the sum keeps the aggregate exact and
     order-free)."""
-    ev = _t(spark, sf_dir, "events").select(
+    ev = read_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type", "value"
     )
     purchases = ev.where(F.col("event_type") == "purchase").select(
@@ -2477,7 +2456,7 @@ def ab_test_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     z-statistic are the identical IEEE expression in both engines; the
     significance flag is |z| > 1.96. One aggregate over the per-user
     conversion frame; output is a single row per variant pair."""
-    ev = _t(spark, sf_dir, "events").select("user_id", "event_type", "value")
+    ev = read_table(spark, sf_dir, "events").select("user_id", "event_type", "value")
     per_user = ev.groupBy("user_id").agg(
         F.max(
             (
@@ -2606,7 +2585,7 @@ def _kcore_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     under the flag), so re-verify both call sites if this derivation
     ever changes."""
     li = (
-        _t(spark, sf_dir, "lineitem")
+        read_table(spark, sf_dir, "lineitem")
         .where(
             (F.col("l_shipdate") >= F.lit("1997-01-01"))
             & (F.col("l_shipdate") < F.lit("1998-01-01"))
@@ -2672,7 +2651,7 @@ def shortest_paths_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vacancy_gpt_etl_pipeline_spark.operators.graph import shortest_paths
 
     seeds = (
-        _t(spark, sf_dir, "part")
+        read_table(spark, sf_dir, "part")
         .where(F.col("p_brand") == "Brand#1")
         .select("p_partkey")
     )
@@ -2798,7 +2777,7 @@ def merge_upsert_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     union + row_number."""
     from vacancy_gpt_etl_pipeline_spark.operators.relational import merge_upsert
 
-    o = _t(spark, sf_dir, "orders").select(
+    o = read_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.col("o_totalprice").cast("decimal(18,2)").alias("o_totalprice"),
         "o_orderstatus",
@@ -2873,7 +2852,7 @@ def stratified_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         stratified_sample,
     )
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "lang")
     out = stratified_sample(
         docs, "lang", {"en": 0.5, "zh": 0.8, "de": 0.2}, "doc_id"
     )
@@ -2899,7 +2878,7 @@ def pack_sequences_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         pack_summary,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     packed = pack_sequences(docs, target_tokens=512, by="source")
     return pack_summary(packed, "source").orderBy("source", "pack_id")
 
@@ -2938,7 +2917,7 @@ def pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         redact_pii,
     )
 
-    docs = _t(spark, sf_dir, "documents", widen=True).select(
+    docs = read_table(spark, sf_dir, "documents", widen=True).select(
         "doc_id",
         F.concat(
             F.col("text"),
@@ -2995,7 +2974,7 @@ def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(0, "spark join"), (1, "window agg stream"), (2, "vector scan")],
         "query_id long, query string",
     )
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     return bm25_topk(docs, queries, k=10)
 
 
@@ -3046,7 +3025,7 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     first signup to first subsequent purchase, bucketed into hour bins
     with user counts. Two map-side-combined min-aggregations + one join on
     user_id — no window, no explosion; the classic funnel shape at scale."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     su = (
         ev.where(F.col("event_type") == "signup")
         .groupBy("user_id")
@@ -3099,7 +3078,7 @@ def asof_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     LEFT JOIN over the deduplicated build side."""
     from vacancy_gpt_etl_pipeline_spark.operators.asof import asof_join
 
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     purchases = ev.where(F.col("event_type") == "purchase").select(
         "user_id", "ts", "event_id", "value"
     )
@@ -3164,7 +3143,7 @@ def sketch_distinct_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         distinct_count_rollup,
     )
 
-    ev = _t(spark, sf_dir, "events").withColumn("day", F.to_date("ts"))
+    ev = read_table(spark, sf_dir, "events").withColumn("day", F.to_date("ts"))
     return distinct_count_rollup(
         ev, ["event_type", "day"], ["event_type"], "user_id", lgk=14
     ).orderBy("event_type")
@@ -3186,7 +3165,7 @@ def sketch_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         approx_quantiles_per_group,
     )
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     out = approx_quantiles_per_group(
         li, ["l_returnflag"], "l_quantity", [0.25, 0.5, 0.75], accuracy=100000
     )
@@ -3222,7 +3201,7 @@ _LANG_CASE = "CASE " + " ".join(
 def text_analysis_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Text-analysis pack: token counts, BPE-ish count, punctuation ratio,
     stopword ratio, heuristic language id, quality score, fingerprint."""
-    d = _t(spark, sf_dir, "documents", widen=True)
+    d = read_table(spark, sf_dir, "documents", widen=True)
     return d.select(
         "doc_id",
         token_count("text").alias("n_tokens"),
@@ -3279,7 +3258,7 @@ def text_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vacancy_gpt_etl_pipeline_spark.operators.curation import quality_filter
 
     return quality_filter(
-        _t(spark, sf_dir, "documents"),
+        read_table(spark, sf_dir, "documents"),
         min_quality=0.5,
         min_tokens=20,
         max_tokens=80,
@@ -3303,7 +3282,7 @@ def time_weighted_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     IEEE division at the end makes the average engine-exact.
     Single-event users drop (zero total weight), top-25 heaviest users
     by observed span reported via TakeOrderedAndProject."""
-    ev = _t(spark, sf_dir, "events").select("user_id", "event_id", "ts", "value")
+    ev = read_table(spark, sf_dir, "events").select("user_id", "event_id", "ts", "value")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     nxt = F.lead("ts").over(w)
     gap = (F.unix_timestamp(nxt) - F.unix_timestamp("ts")).cast("long")
@@ -3358,7 +3337,7 @@ def stratified_split_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     evaluation slices. Per-stratum windows (PARTITIONED — strata
     cardinality grows with data, so no global sort anywhere); output is
     the stratum × split census proving the proportions land exactly."""
-    d = _t(spark, sf_dir, "documents").select("doc_id", "lang", "source")
+    d = read_table(spark, sf_dir, "documents").select("doc_id", "lang", "source")
     w = Window.partitionBy("lang", "source").orderBy("doc_id")
     rn = F.row_number().over(w)
     cnt = F.count(F.lit(1)).over(Window.partitionBy("lang", "source"))
@@ -3398,7 +3377,7 @@ def gopher_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     (split + higher-order array ops) — the filter runs inside the scan
     stage at 100 TB, no UDF anywhere. Ratios are int-over-int single
     IEEE divisions, so both engines produce bit-identical doubles."""
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     w = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
     n_words = F.size(w)
     sum_len = F.aggregate(
@@ -3470,7 +3449,7 @@ def training_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vacancy_gpt_etl_pipeline_spark.operators.curation import curate_documents
 
     return curate_documents(
-        _t(spark, sf_dir, "documents"),
+        read_table(spark, sf_dir, "documents"),
         min_quality=0.5,
         min_tokens=20,
         max_tokens=80,
@@ -3502,7 +3481,7 @@ def adaptive_quality_floor_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     out = adaptive_quality_floor(
-        _t(spark, sf_dir, "documents"), stratum_col="lang", drop_fraction=0.25
+        read_table(spark, sf_dir, "documents"), stratum_col="lang", drop_fraction=0.25
     )
     return out.select("doc_id", "lang", "quality", "lang_floor").orderBy(
         "doc_id"
@@ -3547,7 +3526,7 @@ def boilerplate_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
         remove_boilerplate_ngrams,
     )
 
-    docs = _t(spark, sf_dir, "documents").select(
+    docs = read_table(spark, sf_dir, "documents").select(
         "doc_id",
         F.when(
             F.col("doc_id") % 5 == 0,
@@ -3635,7 +3614,7 @@ def curation_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         pack_summary,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     prof = docs.select(
         "doc_id",
         "text",
@@ -3719,7 +3698,7 @@ def chunk_documents_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vacancy_gpt_etl_pipeline_spark.operators.chunking import chunk_documents
 
     return chunk_documents(
-        _t(spark, sf_dir, "documents"), chunk_tokens=32, stride=24
+        read_table(spark, sf_dir, "documents"), chunk_tokens=32, stride=24
     )
 
 
@@ -3745,7 +3724,7 @@ FROM idx
 def u3_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.7 completeness: INTERSECT (distinct set semantics) — customers
     placing both urgent AND high-priority orders."""
-    o = _t(spark, sf_dir, "orders")
+    o = read_table(spark, sf_dir, "orders")
     urgent = o.where(F.col("o_orderpriority") == "1-URGENT").select("o_custkey")
     high = o.where(F.col("o_orderpriority") == "2-HIGH").select("o_custkey")
     return urgent.intersect(high)
@@ -3761,7 +3740,7 @@ SELECT o_custkey FROM orders WHERE o_orderpriority = '2-HIGH'
 def u4_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.7 completeness: EXCEPT ALL (multiset difference, multiplicity
     preserved) — urgent order slots per customer minus high-priority ones."""
-    o = _t(spark, sf_dir, "orders")
+    o = read_table(spark, sf_dir, "orders")
     urgent = o.where(F.col("o_orderpriority") == "1-URGENT").select("o_custkey")
     high = o.where(F.col("o_orderpriority") == "2-HIGH").select("o_custkey")
     return urgent.exceptAll(high).groupBy("o_custkey").agg(
@@ -3785,7 +3764,7 @@ def train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     are reassigned, and content-keyed splits keep exact duplicates in the
     SAME split by construction. md5's first hex digit < 'd' ⇔ 13/16 of the
     space → train."""
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     fp = F.md5(F.lower(F.regexp_replace(F.trim("text"), r"\s+", " ")))
     split = F.when(F.substring(fp, 1, 1) < "d", "train").otherwise("test")
     return (
@@ -3811,7 +3790,7 @@ def split_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     original, so cross-split duplicate pairs exist and the audit must find
     them. (The content-hash split above is immune by construction — that's
     the point of auditing.)"""
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    d = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     planted = d.where(F.col("doc_id") < 40).select(
         (F.col("doc_id") + 500001).alias("doc_id"), "text"
     )
@@ -3855,7 +3834,7 @@ def multimodal_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal plumbing: binary payload attach + metadata projection.
     Column pruning keeps the payload out of the scan when only metadata is
     read — checked in pytest via the optimized plan."""
-    d = attach_text_payload(_t(spark, sf_dir, "documents"), "text", "image")
+    d = attach_text_payload(read_table(spark, sf_dir, "documents"), "text", "image")
     return d.select(
         "doc_id",
         "modality",
@@ -3887,7 +3866,7 @@ def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     asserted in tests/test_multimodal_decode.py golden tests. mean_luma
     (body-byte mean) stays Spark-side only — per-byte SQL unnesting of
     the png/gif text bodies is not worth an oracle."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     is_bmp = F.col("doc_id") % 4 == 3
     assets = synthesize_image_payload(
         docs.where(~is_bmp), "doc_id", "text"
@@ -3964,7 +3943,7 @@ def salted_hot_key_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     COUNT(DISTINCT)/SUM — a genuinely different algorithm, so a salting
     bug (lost bucket, double-merge) cannot cancel out. Decimal-cast sum
     keeps the double exact and order-independent."""
-    ev = _t(spark, sf_dir, "events").select("event_type", "user_id", "value")
+    ev = read_table(spark, sf_dir, "events").select("event_type", "user_id", "value")
     totals = salted_agg(
         ev,
         ["event_type"],
@@ -4013,7 +3992,7 @@ def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         session_summary,
     )
 
-    ev = _t(spark, sf_dir, "events").select("user_id", "ts")
+    ev = read_table(spark, sf_dir, "events").select("user_id", "ts")
     out = session_summary(ev, gap_seconds=1800.0)
     return out.select(
         "user_id",
@@ -4060,7 +4039,7 @@ def repetition_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         repetition_signals,
     )
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     return repetition_signals(docs, top_n=2, dup_n=3)
 
 
@@ -4115,7 +4094,7 @@ def tfidf_keywords_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         tfidf_keywords,
     )
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     return tfidf_keywords(docs, k=5)
 
 
@@ -4155,7 +4134,7 @@ def weighted_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         weighted_sample,
     )
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "n_chars")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
     return weighted_sample(
         docs, weight=F.col("n_chars").cast("double"), key_col="doc_id", k=100
     ).orderBy("doc_id")
@@ -4185,7 +4164,7 @@ def multimodal_audio_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     hand-written WAV literal is asserted in
     tests/test_multimodal_decode.py. duration/mean are plain IEEE
     divisions of exact ints — bit-identical across engines."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     assets = synthesize_pcm_payload(docs, "doc_id")
     return decode_audio(assets).select(
         "asset_id",
@@ -4255,7 +4234,7 @@ def multimodal_flac_audio_decode(
     tests/test_flac_codec.py. Scan widened: per-payload Rice coding is
     CPU-dense Python (same rationale and measurement series as the
     JPEG family)."""
-    docs = _t(spark, sf_dir, "documents", widen=True)
+    docs = read_table(spark, sf_dir, "documents", widen=True)
     assets = synthesize_flac_payload(docs, "doc_id")
     return decode_audio(assets).select(
         "asset_id",
@@ -4321,7 +4300,7 @@ def multimodal_mp3_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     literals (v2.2/v2.4 tags, MPEG-2, Layers I/II, truncated tails) is
     asserted in tests/test_mp3_census.py. MDCT sample decode is a
     documented boundary, like inter-predicted video."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     assets = synthesize_mp3_payload(docs, "doc_id")
     return census_mp3(assets).select(
         "asset_id",
@@ -4398,7 +4377,7 @@ def webp_container_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays BOTH populations closed-form. Bitstream decode
     (arithmetic-coded VP8) is a documented boundary, like
     inter-predicted video."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     return census_webp(synthesize_webp_payload(docs, "doc_id")).select(
         "asset_id",
         "fmt",
@@ -4448,7 +4427,7 @@ def wds_member_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash only matches if the header layout, the octal fields, and the
     padding hop are byte-exact. Shard-level tasks are the WebDataset
     scale granule (shard count >> executors at 100 TB)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     members = tar_members(synthesize_wds_shards(docs))
     return members.select(
         "shard_id",
@@ -4503,7 +4482,7 @@ def wds_pax_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     header + one padded payload block) in BOTH formats, so a walker
     that emits header members as samples, drops the override, or
     mis-hops the padding changes the row count, names, or offsets."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     members = tar_members(
         synthesize_wds_shards(docs, tar_format="mix", long_name_every=7)
     )
@@ -4559,7 +4538,7 @@ def wds_pack_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed forms with text_ok=TRUE unconditionally: any corruption
     anywhere in the map-build → tar pack → header walk → decode chain
     hash-mismatches."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     i = F.col("doc_id")
     key = F.when(
         i % 13 == 0,
@@ -4629,7 +4608,7 @@ def wds_pack_sized(spark: SparkSession, sf_dir: str) -> DataFrame:
     sub-shards at every fixture SF without ~1000s of tiny
     applyInPandas groups dominating the entry's wall time."""
     budget = 16384
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     i = F.col("doc_id")
     key = F.when(
         i % 13 == 0,
@@ -4718,7 +4697,7 @@ def wds_ingest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     text byte size, and the comparison verdict, so the oracle (which
     emits text_ok=TRUE unconditionally) hash-mismatches on ANY decode
     corruption anywhere in the synthesize→parse→decode chain."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     members = tar_members(synthesize_wds_shards(docs))
     # ONE pass over the members: a txt/cls branch pair as separate
     # frames would re-run the tar synthesis + parse lineage once per
@@ -4771,7 +4750,7 @@ def wds_multimodal_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialization."""
     # widen: shard synth + tar walk + BMP decode/hash Python behind a
     # 1-split scan (r15-opt forced-widen A/B: 4.07 s → 3.54 s)
-    docs = _t(spark, sf_dir, "documents", widen=True)
+    docs = read_table(spark, sf_dir, "documents", widen=True)
     payload = synthesize_bmp_payload(docs, "doc_id").select(
         F.col("asset_id").alias("doc_id"),
         F.col("content").alias("bmp"),
@@ -4804,7 +4783,7 @@ def jpeg_exif_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays every column (all three populations and the
     GPS-presence flag a PII-scrubbing run filters on) closed-form
     from doc_id."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     return census_exif(synthesize_exif_payload(docs, "doc_id")).select(
         "asset_id",
         "fmt",
@@ -4828,7 +4807,7 @@ def tiff_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     ImageLength/BitsPerSample/Compression). Every 37th payload is
     truncated mid-IFD → quarantined as fmt='tiff?'. The oracle replays
     every column closed-form from doc_id."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     return census_tiff(synthesize_tiff_payload(docs, "doc_id")).select(
         "asset_id",
         "fmt",
@@ -4962,7 +4941,7 @@ def tiff_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     # widen: CPU-dense per-row Python (strip decode + DCT hash) behind
     # a 1-split scan — same mechanism as tiff_decode_lzw's measured
     # 4.6 s → 1.2 s A/B; no-op on a production-wide scan
-    docs = _t(spark, sf_dir, "documents", widen=True, widen_target=8).select("doc_id")
+    docs = read_table(spark, sf_dir, "documents", widen=True, widen_target=8).select("doc_id")
     return phash_tiff(synthesize_tiff_pixel_payload(docs, "doc_id")).select(
         "asset_id", "width", "height", "hash_hex"
     )
@@ -4997,7 +4976,7 @@ def tiff_decode_lzw(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 4.6 s → 1.15 s (8 parts) / 1.36 s (32) in an interleaved
     # same-session A/B — widen_scan picks executor width, a no-op on a
     # production-wide scan (guide §2/§4: parallelize the CPU-dense map)
-    docs = _t(spark, sf_dir, "documents", widen=True, widen_target=8).select("doc_id")
+    docs = read_table(spark, sf_dir, "documents", widen=True, widen_target=8).select("doc_id")
     return phash_tiff(synthesize_tiff_cx_payload(docs, "doc_id")).select(
         "asset_id", "width", "height", "hash_hex"
     )
@@ -5053,7 +5032,7 @@ def multimodal_aac_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     header desynchronizes the walk and changes n_frames. Together with
     mp3_frame_census this closes the MP3/AAC gap at the metadata tier
     (sample decode = documented boundary, like inter-predicted video)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     assets = synthesize_adts_payload(docs, "doc_id")
     return census_adts(assets).select(
         "asset_id",
@@ -5108,7 +5087,7 @@ def audio_fingerprint_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     parsing a byte."""
     # widen: PCM decode + integer-DFT windows in Python behind a
     # 1-split scan (r15-opt forced-widen A/B: 1.19 s → 0.73 s)
-    docs = _t(spark, sf_dir, "documents", widen=True, widen_target=8)
+    docs = read_table(spark, sf_dir, "documents", widen=True, widen_target=8)
     assets = synthesize_tone_payload(docs, "doc_id")
     return fingerprint_wav(assets).select(
         "asset_id", "n_samples", "n_windows", "fingerprint"
@@ -5122,7 +5101,7 @@ def audio_fingerprint_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pHash's brightness invariance, asserted end-to-end by the oracle's
     independent group reconstruction."""
     # widen: same fingerprint Python as the census (A/B 1.37 s → 1.04 s)
-    docs = _t(spark, sf_dir, "documents", widen=True, widen_target=8)
+    docs = read_table(spark, sf_dir, "documents", widen=True, widen_target=8)
     fps = fingerprint_wav(synthesize_tone_payload(docs, "doc_id"))
     return audio_fp_dup_groups(fps).select(
         "fingerprint", "n_assets", "keep_id", "drop_count"
@@ -5214,7 +5193,7 @@ def audio_fp_incr_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     the other 48 classes survive keep-first. The oracle recomputes every
     fingerprint from the spectral closed forms and replays both gate
     stages (within-batch keep-first, history anti-join) in SQL."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     hist = fingerprint_wav(
         synthesize_tone_payload(docs.where("doc_id < 16"), "doc_id")
     )
@@ -5264,7 +5243,7 @@ def audio_fp_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute-force same-length Hamming (a genuinely different candidate
     step than Spark's banding, so a band-boundary bug cannot cancel
     out between engines)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     hist = fingerprint_wav(
         synthesize_tone_payload(docs.where("doc_id < 16"), "doc_id")
     )
@@ -5407,7 +5386,7 @@ def image_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     — so the hash only matches if every stage of the Spark decode→DCT
     →threshold pipeline is bit-exact."""
     # widen: BMP decode + DCT hash Python (A/B 1.01 s → 0.84 s)
-    docs = _t(spark, sf_dir, "documents", widen=True, widen_target=8)
+    docs = read_table(spark, sf_dir, "documents", widen=True, widen_target=8)
     hashes = phash_bmp(synthesize_bmp_payload(docs, "doc_id"))
     return phash_dedup_groups(hashes).select(
         "hash_hex", "n_assets", "keep_id", "drop_count"
@@ -5426,7 +5405,7 @@ def image_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (wrong band boundary, lost bucket, cap misfire) cannot cancel out
     between engines."""
     # widen: BMP decode + DCT hash Python (A/B 1.46 s → 1.21 s min-of-3)
-    docs = _t(spark, sf_dir, "documents", widen=True, widen_target=8)
+    docs = read_table(spark, sf_dir, "documents", widen=True, widen_target=8)
     hashes = phash_bmp(synthesize_bmp_payload(docs, "doc_id"))
     return phash_neardup_pairs(hashes, min_hamming=1, max_hamming=2).select(
         "id_a", "id_b", "hamming"
@@ -5526,7 +5505,7 @@ def video_phash_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     geometry, and the whole pHash pipeline agree frame-by-frame."""
     # widen: per-frame Y4M walk + DCT hash is CPU-dense Python behind a
     # 1-split scan (r15-opt forced-widen A/B: 1.40 s → 0.65 s min-of-3)
-    docs = _t(spark, sf_dir, "documents", widen=True, widen_target=8)
+    docs = read_table(spark, sf_dir, "documents", widen=True, widen_target=8)
     assets = synthesize_y4m_payload(docs, "doc_id")
     return phash_y4m(assets).select(
         "asset_id", "width", "height", "n_frames", "video_fp"
@@ -5539,7 +5518,7 @@ def video_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     first-class). One map-side-combinable groupBy; the oracle
     reconstructs the groups independently from the closed forms."""
     # widen: same Y4M decode as video_phash_census (A/B 1.70 s → 0.91 s)
-    docs = _t(spark, sf_dir, "documents", widen=True, widen_target=8)
+    docs = read_table(spark, sf_dir, "documents", widen=True, widen_target=8)
     fps = phash_y4m(synthesize_y4m_payload(docs, "doc_id"))
     return video_phash_dup_groups(fps).select(
         "video_fp", "n_assets", "keep_id", "drop_count"
@@ -5632,7 +5611,7 @@ def video_phash_incr_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the 64-bit pHash is deliberately coarse on tiny synthetic frames)
     collapse keep-first. The oracle recomputes the per-frame integer-
     DCT hashes from the pixel closed forms and replays both stages."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     hist = phash_y4m(
         synthesize_y4m_payload(docs.where("doc_id < 250"), "doc_id")
     )
@@ -5700,7 +5679,7 @@ def multimodal_dedup_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # At production split counts widen_scan returns the scan UNCHANGED
     # (identity), so nothing is repartitioned down and the full table
     # is never cached — the persist is keyed off the identity check.
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     _w = widen_scan(
         docs, raw_scan=True,
         target=min(8, spark.sparkContext.defaultParallelism),
@@ -6015,7 +5994,7 @@ def image_phash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingest keeps hot at 100 TB. The oracle recomputes both hash sets
     closed-form (plants via src_id ≠ doc_id) and replays keep-first,
     NOT EXISTS exact gate, and an OR-of-bands near gate."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     hist_docs = docs.where(F.col("doc_id") < 250)
     batch_assets = synthesize_bmp_payload(
         docs.where(F.col("doc_id") >= 250), "doc_id"
@@ -6085,7 +6064,7 @@ def multimodal_video_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     against a hand-written Y4M literal is asserted in
     tests/test_multimodal_decode.py. Means are BIGINT sums divided once
     in IEEE double — bit-identical across engines."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     assets = synthesize_y4m_payload(docs, "doc_id")
     return decode_video_frames(assets).select(
         "asset_id", "frame_idx", "width", "height", "mean_y", "mean_u", "mean_v"
@@ -6157,7 +6136,7 @@ def multimodal_mjpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     JPEG entropy coding is CPU-dense Python per payload and a
     single-split local file would serialize it on one core (measured
     9.0 s → 1.3 s at sf0.1; no-op on a multi-split cluster scan)."""
-    docs = _t(spark, sf_dir, "documents", widen=True)
+    docs = read_table(spark, sf_dir, "documents", widen=True)
     assets = synthesize_mjpeg_avi_payload(docs, "doc_id")
     return decode_video_frames(assets).select(
         "asset_id", "frame_idx", "width", "height", "mean_y", "mean_u", "mean_v"
@@ -6215,7 +6194,7 @@ def multimodal_jpeg_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     entropy coding is CPU-dense Python and a single-split local file
     would serialize it on one core (measured 4.5 s → 1.1 s at sf0.1;
     no-op on a real multi-split cluster scan)."""
-    docs = _t(spark, sf_dir, "documents", widen=True)
+    docs = read_table(spark, sf_dir, "documents", widen=True)
     assets = synthesize_jpeg_payload(docs, "doc_id")
     return decode_images(assets).select(
         "asset_id", "fmt", "width", "height", "bit_depth",
@@ -6272,11 +6251,11 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     segment-filtered key list). Both date and returnflag filters reach
     the scans. Top-20 via TakeOrderedAndProject (never a global sort);
     c_custkey tie-break pins the cut deterministically."""
-    cust = _t(spark, sf_dir, "customer").select(
+    cust = read_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_acctbal", "c_nationkey"
     )
     orders = (
-        _t(spark, sf_dir, "orders")
+        read_table(spark, sf_dir, "orders")
         .where(
             (F.col("o_orderdate") >= F.lit("1999-01-01"))
             & (F.col("o_orderdate") < F.lit("1999-04-01"))
@@ -6284,11 +6263,11 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("o_orderkey", "o_custkey")
     )
     li = (
-        _t(spark, sf_dir, "lineitem")
+        read_table(spark, sf_dir, "lineitem")
         .where(F.col("l_returnflag") == "R")
         .select("l_orderkey", "l_extendedprice", "l_discount")
     )
-    nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    nation = read_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     dec = lambda c: F.col(c).cast("decimal(12,2)")  # noqa: E731
     revenue = dec("l_extendedprice") * (
         F.lit(1).cast("decimal(12,2)") - dec("l_discount")
@@ -6329,7 +6308,7 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     reaches the parquet scan as a PushedFilter and the decimal products
     combine map-side into a single-row aggregate — the minimal
     full-scan shape whose cost is pure I/O at 100 TB."""
-    li = _t(spark, sf_dir, "lineitem").where(
+    li = read_table(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= F.lit("1997-01-01"))
         & (F.col("l_shipdate") < F.lit("1998-01-01"))
         & (F.col("l_discount") >= 0.05)
@@ -6366,9 +6345,9 @@ def q13_order_count_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both aggregates shuffle on keys whose cardinality shrinks fast
     (customer → distinct count values), the classic histogram-of-
     aggregates shape."""
-    cust = _t(spark, sf_dir, "customer").select("c_custkey")
+    cust = read_table(spark, sf_dir, "customer").select("c_custkey")
     orders = (
-        _t(spark, sf_dir, "orders")
+        read_table(spark, sf_dir, "orders")
         .where(F.col("o_orderpriority") != "1-URGENT")
         .select("o_orderkey", "o_custkey")
     )
@@ -6406,7 +6385,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-wise. Decimal-exact revenue; the max-equality compares
     DECIMALS, never doubles, so ties are exact."""
     li = (
-        _t(spark, sf_dir, "lineitem")
+        read_table(spark, sf_dir, "lineitem")
         .where(
             (F.col("l_shipdate") >= F.lit("1997-01-01"))
             & (F.col("l_shipdate") < F.lit("1997-04-01"))
@@ -6421,7 +6400,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(revenue).alias("_rev")
     )
     mx = per_supp.agg(F.max("_rev").alias("_mx"))
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
+    supp = read_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     return (
         per_supp.join(F.broadcast(mx), F.col("_rev") == F.col("_mx"))
         .join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
@@ -6458,10 +6437,10 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     key lists (suppliers of N1∪N2, customers of N1∪N2) are dimension-
     sized and BROADCAST into the facts; the orderkey fact-fact join
     shuffles. The ship-date band reaches the lineitem scan."""
-    nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    nation = read_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     pair = F.col("n_name").isin("NATION_1", "NATION_2")
     supp = (
-        _t(spark, sf_dir, "supplier")
+        read_table(spark, sf_dir, "supplier")
         .join(
             F.broadcast(nation.where(pair)),
             F.col("s_nationkey") == F.col("n_nationkey"),
@@ -6469,7 +6448,7 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("s_suppkey", F.col("n_name").alias("supp_nation"))
     )
     cust = (
-        _t(spark, sf_dir, "customer")
+        read_table(spark, sf_dir, "customer")
         .join(
             F.broadcast(nation.where(pair)),
             F.col("c_nationkey") == F.col("n_nationkey"),
@@ -6477,7 +6456,7 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("c_custkey", F.col("n_name").alias("cust_nation"))
     )
     li = (
-        _t(spark, sf_dir, "lineitem")
+        read_table(spark, sf_dir, "lineitem")
         .where(
             (F.col("l_shipdate") >= F.lit("1996-01-01"))
             & (F.col("l_shipdate") < F.lit("1998-01-01"))
@@ -6487,7 +6466,7 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
             "l_extendedprice", "l_discount",
         )
     )
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    orders = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     dec = lambda c: F.col(c).cast("decimal(12,2)")  # noqa: E731
     revenue = dec("l_extendedprice") * (
         F.lit(1).cast("decimal(12,2)") - dec("l_discount")
@@ -6540,12 +6519,12 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     list, the supplier→nation map, and the ASIA customer key list all
     broadcast; only orders ⋈ lineitem shuffles. The order-date band
     reaches the orders scan."""
-    nation = _t(spark, sf_dir, "nation").select(
+    nation = read_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
     )
-    region = _t(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
+    region = read_table(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
     asia_cust = (
-        _t(spark, sf_dir, "customer")
+        read_table(spark, sf_dir, "customer")
         .join(
             F.broadcast(
                 nation.join(
@@ -6558,7 +6537,7 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("c_custkey")
     )
     supp = (
-        _t(spark, sf_dir, "supplier")
+        read_table(spark, sf_dir, "supplier")
         .join(
             F.broadcast(nation),
             F.col("s_nationkey") == F.col("n_nationkey"),
@@ -6566,19 +6545,19 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("s_suppkey", F.col("n_name").alias("supp_nation"))
     )
     promo = (
-        _t(spark, sf_dir, "part")
+        read_table(spark, sf_dir, "part")
         .where(F.col("p_type") == "PROMO")
         .select("p_partkey")
     )
     orders = (
-        _t(spark, sf_dir, "orders")
+        read_table(spark, sf_dir, "orders")
         .where(
             (F.col("o_orderdate") >= F.lit("1996-01-01"))
             & (F.col("o_orderdate") < F.lit("1998-01-01"))
         )
         .select("o_orderkey", "o_custkey", "o_orderdate")
     )
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = read_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_suppkey",
         "l_extendedprice", "l_discount",
     )
@@ -6657,8 +6636,8 @@ def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     supersets that DO reach the scans — and re-applies the full
     predicate after the join (the canonical hand-optimized Q19 plan).
     The filtered part side is key-list-sized and broadcasts."""
-    part = _t(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
-    li = _t(spark, sf_dir, "lineitem").select(
+    part = read_table(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
+    li = read_table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_quantity", "l_extendedprice", "l_discount"
     )
     groups = [
@@ -6718,7 +6697,7 @@ def rolling_anomaly_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines, so every reported z-score is bit-identical. Variance via
     the sum-of-squares identity can go negative only by cancellation —
     both engines cancel identically, and the var > 0 guard is shared."""
-    ev = _t(spark, sf_dir, "events").select(
+    ev = read_table(spark, sf_dir, "events").select(
         "user_id", "event_id", "ts", "value"
     )
     dec = F.col("value").cast("decimal(18,2)")
@@ -6790,7 +6769,7 @@ def embedding_gram(spark: SparkSession, sf_dir: str) -> DataFrame:
         quantized_gram,
     )
 
-    emb = _t(spark, sf_dir, "embeddings").select("embedding")
+    emb = read_table(spark, sf_dir, "embeddings").select("embedding")
     return quantized_gram(emb, "embedding", scale=1000)
 
 
@@ -6849,11 +6828,11 @@ def video_container_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
         video_metadata,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     # only the AVI branch does CPU-dense Python (JPEG entropy coding)
     # — widen ITS scan; the y4m/mp4 branches are cheap JVM synthesis
     # and would pay the exchange for nothing (widen_scan docstring)
-    docs_avi = _t(spark, sf_dir, "documents", widen=True)
+    docs_avi = read_table(spark, sf_dir, "documents", widen=True)
     m = F.col("doc_id") % 3
     assets = (
         synthesize_y4m_payload(docs.where(m == 0), "doc_id")
@@ -6932,7 +6911,7 @@ def semdedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     generation (cells, not just cosine math) is hash-verified. Plan:
     broadcast centroids + map-side max_by assignment, pair join on cell
     equality only — never all-pairs."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = read_table(spark, sf_dir, "embeddings")
     base = emb.select(
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
@@ -7006,7 +6985,7 @@ def semdedup_incr_survivors(
         semdedup_incremental,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = read_table(spark, sf_dir, "embeddings")
     base = emb.select(
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias(
@@ -7094,7 +7073,7 @@ def semdedup_2level_survivors(
         semdedup,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = read_table(spark, sf_dir, "embeddings")
     base = emb.select(
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
@@ -7199,7 +7178,7 @@ def scd2_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     total even for same-timestamp events."""
     from vacancy_gpt_etl_pipeline_spark.operators.relational import scd2_history
 
-    ev = _t(spark, sf_dir, "events").select(
+    ev = read_table(spark, sf_dir, "events").select(
         "user_id", "event_type", "ts", "event_id"
     )
     hist = scd2_history(
@@ -7252,7 +7231,7 @@ def pit_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from vacancy_gpt_etl_pipeline_spark.operators.relational import scd2_history
 
-    ev = _t(spark, sf_dir, "events").select(
+    ev = read_table(spark, sf_dir, "events").select(
         "user_id", "event_type", "ts", "event_id"
     )
     hist = scd2_history(
@@ -7324,8 +7303,8 @@ def association_rules_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rule expansion — at 100 TB the pair frame after min-support is
     tiny, and the per-item counts broadcast into it. Emits both rule
     directions (confidence is asymmetric; lift is shared)."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    part = _t(spark, sf_dir, "part").select("p_partkey", "p_brand")
+    li = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    part = read_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     baskets = (
         li.join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
         .select("l_orderkey", "p_brand")
@@ -7419,7 +7398,7 @@ def benford_price_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
     the identical log10 call in both engines and rounded at 6 dp under
     the cosine policy. Single aggregate over a codegen digit
     extraction."""
-    orders = _t(spark, sf_dir, "orders").where(F.col("o_totalprice") > 0.0)
+    orders = read_table(spark, sf_dir, "orders").where(F.col("o_totalprice") > 0.0)
     # FIRST SIGNIFICANT digit (first nonzero char), not the first
     # character: prices in (0,1) start with '0' — a literal first-char
     # digit of 0 would divide by zero in the Benford expectation AND
@@ -7481,7 +7460,7 @@ def ewma_daily_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the current row always contributes weight 1, so the norm is never
     zero). Seven row-lags cover every calendar day within the kernel
     because each (event_type, day) appears at most once."""
-    ev = _t(spark, sf_dir, "events").select(
+    ev = read_table(spark, sf_dir, "events").select(
         F.to_date(F.col("ts")).alias("day"), "event_type"
     )
     daily = ev.groupBy("day", "event_type").agg(
@@ -7582,7 +7561,7 @@ def dau_wau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct aggregate. Exact integer counts; stickiness is one IEEE
     division."""
     ev = (
-        _t(spark, sf_dir, "events")
+        read_table(spark, sf_dir, "events")
         .select(F.to_date(F.col("ts")).alias("day"), "user_id")
         .distinct()  # user-days, not events: the 7x expansion below
         # multiplies |user-days|, never per-day event multiplicity
@@ -7645,7 +7624,7 @@ def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     window pass (lag over the per-user total order with event_id
     tie-break) + one aggregate; the probability is an exact
     integer-ratio division. 25 output rows regardless of scale."""
-    ev = _t(spark, sf_dir, "events").select("user_id", "ts", "event_id", "event_type")
+    ev = read_table(spark, sf_dir, "events").select("user_id", "ts", "event_id", "event_type")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     pairs = ev.select(
         F.lag("event_type").over(w).alias("from_type"),
@@ -7695,7 +7674,7 @@ def diff_in_diff_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     before/after comparison confounds. All four cell rates come from
     exact integer counts over (variant, period, user) conversion flags;
     the DiD estimate is three IEEE subtractions of identical doubles."""
-    ev = _t(spark, sf_dir, "events").select("user_id", "ts", "event_type", "value")
+    ev = read_table(spark, sf_dir, "events").select("user_id", "ts", "event_type", "value")
     period = F.when(F.col("ts") < F.lit("2024-01-16"), F.lit(0)).otherwise(
         F.lit(1)
     )
@@ -7772,7 +7751,7 @@ def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE aggregate; each quintile is a distributed grouped_ntile (range
     exchange + broadcast offsets, operators/ranking) — no single-task
     global window anywhere in the plan (the r6 judge's scale flag)."""
-    orders = _t(spark, sf_dir, "orders").select(
+    orders = read_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderdate", "o_totalprice"
     )
     per_cust = orders.groupBy("o_custkey").agg(
@@ -7902,7 +7881,7 @@ def pareto_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
         ranked_local,
     )
 
-    orders = _t(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
+    orders = read_table(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
     per_cust = orders.groupBy("o_custkey").agg(
         F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("rev")
     )
@@ -8008,7 +7987,7 @@ def cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         first_seen_cohorts,
     )
 
-    ev = _t(spark, sf_dir, "events").select(
+    ev = read_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_type", "value"
     )
     sized = first_seen_cohorts(ev).withColumnRenamed("u", "user_id")
@@ -8095,7 +8074,7 @@ def orders_with_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-joins with one wide write. Restricted to one ship-month so the
     output stays bench-sized."""
     li = (
-        _t(spark, sf_dir, "lineitem")
+        read_table(spark, sf_dir, "lineitem")
         .where(
             (F.col("l_shipdate") >= F.lit("1997-03-01"))
             & (F.col("l_shipdate") < F.lit("1997-04-01"))
@@ -8118,7 +8097,7 @@ def orders_with_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
             ",",
         ).alias("lines"),
     )
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
+    orders = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
     return (
         orders.join(nested, orders["o_orderkey"] == nested["l_orderkey"])
         .select("o_orderkey", "o_orderstatus", "n_lines", "total_qty", "lines")
@@ -8158,7 +8137,7 @@ def growth_accounting_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
     observe) and reports 0 rather than a guaranteed-false 100% churn.
     All exact integer counts; the active frame is |user-weeks|, never
     event-sized."""
-    ev = _t(spark, sf_dir, "events").select(
+    ev = read_table(spark, sf_dir, "events").select(
         F.date_trunc("week", F.col("ts")).cast("date").alias("week"), "user_id"
     ).distinct()
     max_week = ev.agg(F.max("week").alias("max_week"))
@@ -8248,10 +8227,10 @@ def price_volume_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     that explains WHY revenue moved. Per-brand-year price is the
     decimal-sum/double-count average; qty sums are exact decimals; the
     three effects are identical IEEE expressions in both engines."""
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = read_table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_shipdate", "l_extendedprice", "l_quantity"
     )
-    part = _t(spark, sf_dir, "part").select("p_partkey", "p_brand")
+    part = read_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     year = F.year("l_shipdate")
 
     # ONE scan + ONE aggregate: per-year sums as conditional decimal
@@ -8325,7 +8304,7 @@ def seasonality_dow_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     expectation (index 1.0 = no seasonality). Two exact integer counts
     and two IEEE divisions; the Monday=1 ISO weekday convention is
     pinned explicitly in both engines (engine defaults differ)."""
-    ev = _t(spark, sf_dir, "events").select(
+    ev = read_table(spark, sf_dir, "events").select(
         F.dayofweek("ts").alias("_dow_sun1"), "event_type"
     )
     # Spark dayofweek: Sunday=1 .. Saturday=7 → convert to ISO Mon=1..Sun=7
@@ -8371,11 +8350,11 @@ def order_fulfillment_aging(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed key); day gaps are exact integers, the average is the
     decimal-sum/double-count form. The ops report behind late-delivery
     SLAs."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
+    li = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
     last_ship = li.groupBy("l_orderkey").agg(
         F.max("l_shipdate").alias("last_ship")
     )
-    orders = _t(spark, sf_dir, "orders").select(
+    orders = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate", "o_orderpriority"
     )
     aged = orders.join(
@@ -8438,7 +8417,7 @@ def expectations_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_expectations,
     )
 
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     suite = [
         expect_not_null("o_custkey"),
         expect_unique("o_orderkey"),
@@ -8504,7 +8483,7 @@ def profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         profile_columns,
     )
 
-    orders = _t(spark, sf_dir, "orders").select(
+    orders = read_table(spark, sf_dir, "orders").select(
         "o_custkey",
         "o_orderstatus",
         "o_orderdate",
@@ -8547,7 +8526,7 @@ def incremental_rollup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     split = F.lit("2024-03-01")
-    ev = _t(spark, sf_dir, "events").select(
+    ev = read_table(spark, sf_dir, "events").select(
         "event_type",
         F.date_format("ts", "yyyy-MM-dd").alias("day"),
         F.col("value").cast("decimal(18,2)").alias("value"),
@@ -8595,7 +8574,7 @@ def windowed_cms_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         windowed_cms_agg,
     )
 
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     out = windowed_cms_agg(
         ev, "user_id", "ts", "1 day", depth=_CMS_DEPTH, width=_CMS_WIDTH
     )
@@ -8629,13 +8608,13 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     any join. Decimal-exact revenue (q1 pattern), double-cast at the
     end; TakeOrderedAndProject for the top-10, never a global sort."""
     cutoff = F.lit("1998-06-15")
-    cust = _t(spark, sf_dir, "customer").where(
+    cust = read_table(spark, sf_dir, "customer").where(
         F.col("c_mktsegment") == "BUILDING"
     ).select("c_custkey")
-    orders = _t(spark, sf_dir, "orders").where(F.col("o_orderdate") < cutoff).select(
+    orders = read_table(spark, sf_dir, "orders").where(F.col("o_orderdate") < cutoff).select(
         "o_orderkey", "o_custkey", "o_orderdate", "o_orderpriority"
     )
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_shipdate") > cutoff).select(
+    li = read_table(spark, sf_dir, "lineitem").where(F.col("l_shipdate") > cutoff).select(
         "l_orderkey", "l_extendedprice", "l_discount"
     )
     dec = lambda c: F.col(c).cast("decimal(12,2)")  # noqa: E731
@@ -8682,13 +8661,13 @@ def q18_large_volume_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB replaces re-scanning lineitem per order. Decimal-exact
     quantity sums; top-k tie-broken by orderkey via
     TakeOrderedAndProject."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
+    li = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
     big = (
         li.groupBy("l_orderkey")
         .agg(_dsum("l_quantity", "total_qty"))
         .where(F.col("total_qty") > 150.0)
     )
-    orders = _t(spark, sf_dir, "orders").select(
+    orders = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderdate"
     )
     return (
@@ -8735,31 +8714,31 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     (PushedFilters) so the orderkey shuffle carries ~1/6 of orders.
     Decimal-exact revenue (q3 pattern); n_name is the 5-row output key."""
     region = (
-        _t(spark, sf_dir, "region")
+        read_table(spark, sf_dir, "region")
         .where(F.col("r_name") == "ASIA")
         .select("r_regionkey")
     )
     nation = (
-        _t(spark, sf_dir, "nation")
+        read_table(spark, sf_dir, "nation")
         .join(F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey"))
         .select("n_nationkey", "n_name")
     )
     supp = (
-        _t(spark, sf_dir, "supplier")
+        read_table(spark, sf_dir, "supplier")
         .select("s_suppkey", "s_nationkey")
         .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
         .select("s_suppkey", "s_nationkey", "n_name")
     )
     orders = (
-        _t(spark, sf_dir, "orders")
+        read_table(spark, sf_dir, "orders")
         .where(
             (F.col("o_orderdate") >= F.lit("1996-01-01"))
             & (F.col("o_orderdate") < F.lit("1997-01-01"))
         )
         .select("o_orderkey", "o_custkey")
     )
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    li = _t(spark, sf_dir, "lineitem").select(
+    cust = read_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    li = read_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"
     )
     dec = lambda c: F.col(c).cast("decimal(12,2)")  # noqa: E731
@@ -8808,9 +8787,9 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate — no shuffle wider than one row. Revenue terms are
     decimal-exact; the percentage is one IEEE double division performed
     identically by both engines, so it ships unrounded."""
-    part = _t(spark, sf_dir, "part").select("p_partkey", "p_type")
+    part = read_table(spark, sf_dir, "part").select("p_partkey", "p_type")
     li = (
-        _t(spark, sf_dir, "lineitem")
+        read_table(spark, sf_dir, "lineitem")
         .where(
             (F.col("l_shipdate") >= F.lit("1997-09-01"))
             & (F.col("l_shipdate") < F.lit("1997-10-01"))
@@ -8870,11 +8849,11 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal-sum/double-count expression in both engines, so the double
     comparison l_quantity < threshold is bit-deterministic."""
     part = (
-        _t(spark, sf_dir, "part")
+        read_table(spark, sf_dir, "part")
         .where(F.col("p_brand") == "Brand#23")
         .select("p_partkey")
     )
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = read_table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_quantity", "l_extendedprice"
     )
     brand_li = li.join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
@@ -8932,11 +8911,11 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier/nation are broadcast dims. MIN over doubles is exact, so
     the join-back compares bit-identical values in both engines."""
     part = (
-        _t(spark, sf_dir, "part")
+        read_table(spark, sf_dir, "part")
         .where((F.col("p_type") == "LARGE") & (F.col("p_size") >= 10))
         .select("p_partkey", "p_brand")
     )
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = read_table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_suppkey", "l_extendedprice"
     )
     pair_cost = (
@@ -8947,8 +8926,8 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     best = pair_cost.groupBy(F.col("p_partkey").alias("b_partkey")).agg(
         F.min("min_cost").alias("best_cost")
     )
-    supp = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    supp = read_table(spark, sf_dir, "supplier")
+    nation = read_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     return (
         pair_cost.join(
             F.broadcast(best),
@@ -8992,17 +8971,17 @@ def q9_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     products fit precision 38 with NO scale truncation in either
     engine — with one double conversion after the final SUM."""
     part = (
-        _t(spark, sf_dir, "part")
+        read_table(spark, sf_dir, "part")
         .where(F.col("p_name").like("%gear%"))
         .select("p_partkey", "p_retailprice")
     )
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = read_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_suppkey", "l_quantity",
         "l_extendedprice", "l_discount",
     )
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
+    supp = read_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    nation = read_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    orders = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
     amount = F.col("l_extendedprice").cast("decimal(12,2)") * (
         F.lit(1) - F.col("l_discount")
     ).cast("decimal(4,2)") - F.expr("CAST(0.6 AS DECIMAL(2,1))") * F.col(
@@ -9056,12 +9035,12 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     across engines, though not per exact-decimal semantics. Unlike the
     spec's hardwired FRACTION the threshold is scale-invariant, so the
     selectivity survives a 100× row-count jump."""
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    nation = _t(spark, sf_dir, "nation").where(F.col("n_regionkey") == 0)
+    supp = read_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    nation = read_table(spark, sf_dir, "nation").where(F.col("n_regionkey") == 0)
     region_supp = supp.join(
         F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey")
     ).select("s_suppkey")
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = read_table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_suppkey", "l_extendedprice", "l_discount"
     )
     val = F.col("l_extendedprice").cast("decimal(12,2)") * (
@@ -9123,11 +9102,11 @@ def bloom_semi_join_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vacancy_gpt_etl_pipeline_spark.operators.bloom import bloom_semi_join
 
     cust = (
-        _t(spark, sf_dir, "customer")
+        read_table(spark, sf_dir, "customer")
         .where(F.col("c_acctbal") > 9000)
         .select("c_custkey")
     )
-    orders = _t(spark, sf_dir, "orders").select(
+    orders = read_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderpriority", "o_totalprice"
     )
     kept = bloom_semi_join(orders, cust, "o_custkey", "c_custkey")
@@ -9159,11 +9138,11 @@ def q12_priority_linestatus(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter pushed to the scan) feeding a conditional aggregate: urgent
     (priority 1-2) vs other line counts per flag, both as map-side-
     combined SUM(CASE)."""
-    orders = _t(spark, sf_dir, "orders").select(
+    orders = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate", "o_orderpriority"
     )
     li = (
-        _t(spark, sf_dir, "lineitem")
+        read_table(spark, sf_dir, "lineitem")
         .where(
             (F.col("l_shipdate") >= F.lit("1997-01-01"))
             & (F.col("l_shipdate") < F.lit("1998-01-01"))
@@ -9209,7 +9188,7 @@ def q16_supplier_part_variety(spark: SparkSession, sf_dir: str) -> DataFrame:
     breadth per (brand, type, size) is an exact COUNT(DISTINCT) whose
     partial de-dup happens map-side under the hash aggregate."""
     part = (
-        _t(spark, sf_dir, "part")
+        read_table(spark, sf_dir, "part")
         .where(
             (F.col("p_brand") != "Brand#1")
             & (~F.col("p_type").like("PROMO%"))
@@ -9218,12 +9197,12 @@ def q16_supplier_part_variety(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("p_partkey", "p_brand", "p_type", "p_size")
     )
     bad_supp = (
-        _t(spark, sf_dir, "supplier")
+        read_table(spark, sf_dir, "supplier")
         .where(F.col("s_acctbal") < 0)
         .select("s_suppkey")
     )
     pairs = (
-        _t(spark, sf_dir, "lineitem")
+        read_table(spark, sf_dir, "lineitem")
         .select("l_partkey", "l_suppkey")
         .join(
             F.broadcast(bad_supp),
@@ -9265,12 +9244,12 @@ def q20_excess_shippers(spark: SparkSession, sf_dir: str) -> DataFrame:
     the broadcast supplier dim — the name filter on part prunes the
     lineitem scan first."""
     part = (
-        _t(spark, sf_dir, "part")
+        read_table(spark, sf_dir, "part")
         .where(F.col("p_name").like("small%"))
         .select("p_partkey")
     )
     li = (
-        _t(spark, sf_dir, "lineitem")
+        read_table(spark, sf_dir, "lineitem")
         .where(
             (F.col("l_shipdate") >= F.lit("1997-01-01"))
             & (F.col("l_shipdate") < F.lit("1998-01-01"))
@@ -9293,8 +9272,8 @@ def q20_excess_shippers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_suppkey")
         .distinct()
     )
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name", "s_nationkey")
-    nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    supp = read_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name", "s_nationkey")
+    nation = read_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     return (
         supp.join(F.broadcast(excess), F.col("s_suppkey") == F.col("l_suppkey"), "left_semi")
         .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
@@ -9336,11 +9315,11 @@ def q21_waiting_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXISTS/NOT-EXISTS formulation, so the two engines verify each other
     through INDEPENDENT algorithms."""
     orders = (
-        _t(spark, sf_dir, "orders")
+        read_table(spark, sf_dir, "orders")
         .where(F.col("o_orderstatus") == "F")
         .select("o_orderkey", "o_orderdate")
     )
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = read_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_shipdate"
     )
     tagged = li.join(orders, F.col("l_orderkey") == F.col("o_orderkey")).select(
@@ -9360,7 +9339,7 @@ def q21_waiting_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     waiting = per_order.where(
         (F.col("_nsupp") >= 2) & (F.col("_nlate") == 1)
     ).select(F.col("_late_supp").alias("suppkey"))
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
+    supp = read_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     return (
         waiting.groupBy("suppkey")
         .agg(F.count(F.lit(1)).alias("numwait"))
@@ -9404,14 +9383,14 @@ def q4_late_shipment_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     matches inside the join operator, so no distinct pass and each order
     is counted once. The quarter filter is pushed into the orders scan."""
     orders = (
-        _t(spark, sf_dir, "orders")
+        read_table(spark, sf_dir, "orders")
         .where(
             (F.col("o_orderdate") >= F.lit("1997-01-01"))
             & (F.col("o_orderdate") < F.lit("1997-04-01"))
         )
         .select("o_orderkey", "o_orderdate", "o_orderpriority")
     )
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
+    li = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
     late = orders.join(
         li,
         (F.col("o_orderkey") == F.col("l_orderkey"))
@@ -9452,7 +9431,7 @@ def q22_idle_customer_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter. The average is the repo-standard decimal-sum/double-count
     expression so the c_acctbal > avg_bal double comparison matches
     DuckDB exactly."""
-    cust = _t(spark, sf_dir, "customer").select(
+    cust = read_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey", "c_acctbal"
     )
     avg_pos = cust.where(F.col("c_acctbal") > 0.0).agg(
@@ -9462,7 +9441,7 @@ def q22_idle_customer_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("avg_bal")
     )
     orders = (
-        _t(spark, sf_dir, "orders")
+        read_table(spark, sf_dir, "orders")
         .where(F.col("o_orderdate") >= F.lit("1999-01-01"))
         .select("o_custkey")
     )
@@ -9511,7 +9490,7 @@ def snapshot_diff_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter."""
     from vacancy_gpt_etl_pipeline_spark.operators.diff import snapshot_diff
 
-    orders = _t(spark, sf_dir, "orders").select(
+    orders = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate", "o_orderstatus", "o_totalprice"
     )
     old = orders.where(
@@ -9580,7 +9559,7 @@ def triangle_count_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vacancy_gpt_etl_pipeline_spark.operators.graph import count_triangles
 
     li = (
-        _t(spark, sf_dir, "lineitem")
+        read_table(spark, sf_dir, "lineitem")
         .where(
             (F.col("l_shipdate") >= F.lit("1997-01-01"))
             & (F.col("l_shipdate") < F.lit("1998-01-01"))
@@ -9644,7 +9623,7 @@ def char_diversity_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # widen: per-char explode/aggregate expressions over a 1-split scan
     # (r15-opt forced-widen A/B: 2.09 s → 0.84 s min-of-3)
-    docs = _t(spark, sf_dir, "documents", widen=True).select(
+    docs = read_table(spark, sf_dir, "documents", widen=True).select(
         "doc_id", "text"
     )
     return char_diversity_profile(docs)
@@ -9687,7 +9666,7 @@ def winsorize_order_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
     and adding count×bound products, which are plain IEEE multiplies."""
     from vacancy_gpt_etl_pipeline_spark.operators.winsorize import winsorize
 
-    orders = _t(spark, sf_dir, "orders").select("o_orderstatus", "o_totalprice")
+    orders = read_table(spark, sf_dir, "orders").select("o_orderstatus", "o_totalprice")
     wdf = winsorize(orders, "o_totalprice", ["o_orderstatus"])
     v, lo, hi = F.col("o_totalprice"), F.col("q_lower"), F.col("q_upper")
     agg = wdf.groupBy("o_orderstatus").agg(
@@ -9773,7 +9752,7 @@ def embedding_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     # widen: the Σx² fold + per-component divide are interpreted
     # higher-order expressions over a 1-split scan — CPU-dense map work
     # (r15-opt forced-widen A/B: 2.00 s → 1.40 s min-of-3)
-    emb = _t(spark, sf_dir, "embeddings", widen=True).select(
+    emb = read_table(spark, sf_dir, "embeddings", widen=True).select(
         "vec_id", "embedding"
     )
     unit = l2_normalize(emb, "embedding")
@@ -9812,7 +9791,7 @@ def mad_outlier_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     outlier predicate |x−median| > 3·MAD is plain IEEE arithmetic."""
     from vacancy_gpt_etl_pipeline_spark.operators.winsorize import mad_outliers
 
-    ev = _t(spark, sf_dir, "events").select("event_type", "value")
+    ev = read_table(spark, sf_dir, "events").select("event_type", "value")
     flagged = mad_outliers(ev, "value", ["event_type"], k=3.0)
     return (
         flagged.groupBy("event_type")
@@ -9877,7 +9856,7 @@ def vocab_oov_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts re-aggregate the per-doc frame; the vocab broadcasts back."""
     from vacancy_gpt_etl_pipeline_spark.operators.curation import vocab_oov_rate
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     return vocab_oov_rate(docs, vocab_size=16)
 
 
@@ -9919,7 +9898,7 @@ def feature_scale_balances(spark: SparkSession, sf_dir: str) -> DataFrame:
     anywhere."""
     from vacancy_gpt_etl_pipeline_spark.operators.scaling import feature_scale
 
-    cust = _t(spark, sf_dir, "customer").select(
+    cust = read_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_acctbal"
     )
     return feature_scale(cust, "c_acctbal", ["c_mktsegment"])
@@ -9960,7 +9939,7 @@ def top_orders_per_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator, so each map task keeps only k rows per group before the
     exchange — at 100 TB the shuffle carries k·groups rows, not the
     table. Asserted in test_plan_shapes."""
-    orders = _t(spark, sf_dir, "orders").select(
+    orders = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
     w = Window.partitionBy("o_orderpriority").orderBy(
@@ -10001,7 +9980,7 @@ def gapfill_daily_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells really are gaps (the unfiltered stream covers every day×type
     cell, which would never exercise the zero path)."""
     ev = (
-        _t(spark, sf_dir, "events")
+        read_table(spark, sf_dir, "events")
         .where(F.col("value") >= 300.0)
         .select(F.to_date(F.col("ts")).alias("day"), "event_type")
     )
@@ -10053,7 +10032,7 @@ def kfold_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     split it; only this census aggregates."""
     from vacancy_gpt_etl_pipeline_spark.operators.sampling import kfold_assign
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "lang")
     return (
         kfold_assign(docs, "doc_id", k=5)
         .groupBy("fold", "lang")
@@ -10084,7 +10063,7 @@ def histogram_order_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
     same guard skyline2d's bucket assignment carries). One fact-sized
     aggregate total."""
     nbins = 20
-    orders = _t(spark, sf_dir, "orders").select("o_totalprice")
+    orders = read_table(spark, sf_dir, "orders").select("o_totalprice")
     span = orders.agg(
         F.min("o_totalprice").alias("mn"), F.max("o_totalprice").alias("mx")
     )
@@ -10131,7 +10110,7 @@ def pearson_corr_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     2-decimal inputs make every product a 4-decimal value — cast to
     double once, then r = (nΣxy − ΣxΣy)/(√(nΣx²−(Σx)²)·√(nΣy²−(Σy)²))
     is the identical IEEE expression in both engines. No rounding."""
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = read_table(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_extendedprice", "l_quantity"
     )
     x = F.col("l_extendedprice").cast("decimal(18,2)")
@@ -10187,7 +10166,7 @@ def golden_user_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     window, no self-join, no nondeterminism. At 100 TB this is the
     single-shuffle alternative to the rank-and-filter golden-record
     pattern (which sorts every group)."""
-    ev = _t(spark, sf_dir, "events").select(
+    ev = read_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type", "value"
     )
     order_key = F.struct("ts", "event_id")
@@ -10230,7 +10209,7 @@ def grouping_sets_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     Expand + one aggregate; grouping flags disambiguate the NULLs that
     mark each set (a real NULL key and a subtotal row would otherwise
     collide)."""
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders_gs")
+    read_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_gs")
     return spark.sql(
         """
         SELECT o_orderstatus, o_orderpriority,
@@ -10263,7 +10242,7 @@ def unpivot_part_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-metric pipelines. Map-side Expand only — each input row emits
     one row per measure with NO shuffle; the tidy frame feeds the same
     groupBy machinery as any long-format table."""
-    part = _t(spark, sf_dir, "part").select(
+    part = read_table(spark, sf_dir, "part").select(
         "p_partkey",
         F.col("p_size").cast("double").alias("p_size"),
         F.col("p_retailprice").cast("double").alias("p_retailprice"),
@@ -10293,7 +10272,7 @@ def skyline_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines share no algorithm."""
     from vacancy_gpt_etl_pipeline_spark.operators.skyline import skyline2d
 
-    part = _t(spark, sf_dir, "part").select(
+    part = read_table(spark, sf_dir, "part").select(
         "p_partkey", "p_retailprice", "p_size"
     )
     return skyline2d(part, "p_retailprice", "p_size").orderBy("p_partkey")
@@ -10324,7 +10303,7 @@ def ann_incremental_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         knn_brute_force,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = read_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -10346,7 +10325,7 @@ def sentiment_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         sentiment_score,
     )
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     pos, neg = sentiment_counts("text")
     return docs.select(
         "doc_id",
@@ -10390,7 +10369,7 @@ def salted_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     visible per event_id."""
     from vacancy_gpt_etl_pipeline_spark.operators.skew import salted_join
 
-    ev = _t(spark, sf_dir, "events").select("event_id", "event_type", "value")
+    ev = read_table(spark, sf_dir, "events").select("event_id", "event_type", "value")
     dim = (
         ev.where(F.col("event_type") != "purchase")
         .select("event_type")
@@ -10432,7 +10411,7 @@ def pagerank_supplier_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     tuples move."""
     from vacancy_gpt_etl_pipeline_spark.operators.graph import pagerank
 
-    li = _t(spark, sf_dir, "lineitem").select("l_suppkey", "l_partkey")
+    li = read_table(spark, sf_dir, "lineitem").select("l_suppkey", "l_partkey")
     sp = li.select(
         F.col("l_suppkey").cast("long").alias("a"),
         (F.col("l_partkey").cast("long") + 1000000).alias("b"),
@@ -10491,7 +10470,7 @@ def cms_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
         cms_estimate,
     )
 
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     sketch = cms_build(ev, "user_id", depth=_CMS_DEPTH, width=_CMS_WIDTH)
     probes = ev.where(F.col("user_id") < 25).select("user_id").distinct()
     return cms_estimate(
@@ -10538,7 +10517,7 @@ def unicode_nfc_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         unicode_normalize_udf,
     )
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     planted = docs.select(
         "doc_id",
         F.when(
@@ -10590,7 +10569,7 @@ def shuffle_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         shuffle_shards,
     )
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id")
     return shuffle_shards(docs, "doc_id", num_shards=16).orderBy(
         "shard_id", "pos_in_shard"
     )
@@ -10622,7 +10601,7 @@ def ngram_contamination_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         ngram_contamination,
     )
 
-    docs = _t(spark, sf_dir, "documents", widen=True).select("doc_id", "text")
+    docs = read_table(spark, sf_dir, "documents", widen=True).select("doc_id", "text")
     train = docs.where(F.col("doc_id") % 10 != 0)
     test = docs.where(F.col("doc_id") % 10 == 0)
     return ngram_contamination(train, test, n=13)
@@ -10677,7 +10656,7 @@ def bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         bigram_lm_scores,
     )
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     return bigram_lm_scores(docs, add_k=0.5)
 
 
@@ -10720,7 +10699,7 @@ def budget_mix_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative sum."""
     from vacancy_gpt_etl_pipeline_spark.operators.sampling import budget_mix
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
     out = budget_mix(
         docs,
         stratum_col="source",
@@ -10761,7 +10740,7 @@ def bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     length), not O(corpus tokens) — and the character-pair explode runs
     over that bounded table. Top-k via TakeOrdered on (count desc, pair)
     — total order, no global window. Exact bigint counts end to end."""
-    docs = _t(spark, sf_dir, "documents").select("text")
+    docs = read_table(spark, sf_dir, "documents").select("text")
     words = docs.select(
         F.explode(F.split(F.col("text"), " ")).alias("word")
     ).where(F.col("word") != "")
@@ -10820,7 +10799,7 @@ def temperature_mix_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     shares and expected-doc columns are deterministic IEEE expressions
     over exact integers. One count aggregate + one broadcast of the
     20-row totals frame."""
-    docs = _t(spark, sf_dir, "documents").select("source")
+    docs = read_table(spark, sf_dir, "documents").select("source")
     per_src = docs.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs")
     )
@@ -10889,7 +10868,7 @@ def weighted_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast self-join over the SOURCE-cardinality frame (no global
     window), and the per-source pick is a PARTITIONED row_number —
     WindowGroupLimit truncates map-side before the exchange."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "source")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "source")
     per_src = docs.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs")
     )
@@ -11035,7 +11014,7 @@ def fim_transform_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL docs (< 16 chars) pass through untransformed like the
     autoregressive half. Entirely map-side codegen — substrings +
     concat, no shuffle except the source scan."""
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    d = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     n = F.length("text")
     third = F.greatest(n / F.lit(3), F.lit(1)).cast("bigint")
     s1 = (F.lit(1) + F.col("doc_id") % third).cast("int")
@@ -11118,7 +11097,7 @@ def bpe_token_counts_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         bpe_token_counts,
     )
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     return bpe_token_counts(docs).orderBy("doc_id")
 
 
@@ -11159,7 +11138,7 @@ def bpe_pack_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         bpe_token_counts,
     )
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "source", "text")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
     counts = bpe_token_counts(docs).where(F.col("n_tokens") > 0)
     w = (
         Window.partitionBy("source")
@@ -11251,7 +11230,7 @@ def bpe_bytelevel_counts_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         bpe_bytelevel_counts,
     )
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     return bpe_bytelevel_counts(docs).orderBy("doc_id")
 
 
@@ -11304,7 +11283,7 @@ def bpe_bytelevel_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
         bpe_bytelevel_counts,
     )
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "source", "text")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
     counts = bpe_bytelevel_counts(docs).where(F.col("n_tokens") > 0)
     w = (
         Window.partitionBy("source")
@@ -11397,7 +11376,7 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _learned_merges_df(spark: SparkSession, sf_dir: str, trainer) -> DataFrame:
     """Shared body of the two trainer entries: run ``trainer`` on the
     documents text and surface the ranked merge list as a frame."""
-    docs = _t(spark, sf_dir, "documents").select("text")
+    docs = read_table(spark, sf_dir, "documents").select("text")
     learned = trainer(docs, _BPE_TRAIN_N)
     rows = [(r, x, y, c) for r, (x, y, c) in enumerate(learned)]
     return spark.createDataFrame(
@@ -11440,7 +11419,7 @@ def bpe_gpt2_prefix_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         bpe_bytelevel_counts,
     )
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     return bpe_bytelevel_counts(
         docs, merges=GPT2_BYTE_MERGES_PREFIX
     ).orderBy("doc_id")
@@ -11492,7 +11471,7 @@ def bpe_train_encode_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
         bpe_token_counts,
     )
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "source", "text")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
     # Words containing the oracle's symbol separator (U+001F) are
     # excluded from training (learn + wf filter them); exclude them
     # from the ENCODE input too so both engines agree on the
@@ -11612,7 +11591,7 @@ def fix_mojibake_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     cannot drift."""
     from vacancy_gpt_etl_pipeline_spark.functions.text import fix_mojibake
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     planted = F.col("text")
     for word, bad in _MOJIBAKE_PLANT:
         planted = F.replace(planted, F.lit(word), F.lit(bad))
@@ -11713,7 +11692,7 @@ def quality_classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep decision compares the exact integer sum — zero FP-accumulation
     risk. Docs with no words carry no signal and are omitted
     (documented; a pipeline would route them to the length filter)."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     return (
         _hashed_logits(spark, docs)
         .select(
@@ -11770,7 +11749,7 @@ def source_kl_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     table re-aggregates FROM the source-word counts — one corpus pass
     total. Corpus marginals and source totals ride broadcast joins."""
     words = (
-        _t(spark, sf_dir, "documents")
+        read_table(spark, sf_dir, "documents")
         .select("source", F.explode(F.split(F.col("text"), " ")).alias("word"))
         .where(F.col("word") != "")
     )
@@ -11867,7 +11846,7 @@ def ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     grams and 0.0 novelty."""
     from vacancy_gpt_etl_pipeline_spark.operators.dedup import _shingled
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     inv = _shingled(docs, "text", "doc_id", 3).select(
         "_id", F.explode("_sh").alias("_g")
     )
@@ -11932,7 +11911,7 @@ def source_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     worst case and the gram key itself is the shuffle key; set sizes
     ride a broadcast join. Exact integer intersections/unions; one
     rounded division per pair."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "source", "text")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
     from vacancy_gpt_etl_pipeline_spark.operators.dedup import _shingled
 
     sh = _shingled(docs, "text", "doc_id", 3)
@@ -12012,7 +11991,7 @@ def curriculum_order_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the full ordering is total and engine-exact. No global window — the
     cross-source interleave IS the (phase, source, rank) sort order of
     the result, not a computed global position."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "source", "text")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
     scored = docs.select(
         "doc_id", "source", quality_score("text").alias("quality")
     )
@@ -12080,7 +12059,7 @@ def training_mix_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         bpe_token_counts,
     )
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "source", "text")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
     fp = F.md5(F.lower(F.regexp_replace(F.trim(F.col("text")), r"\s+", " ")))
     wfp = Window.partitionBy("_fp").orderBy("doc_id")
     # persisted: both the classifier word explode and the survivor
@@ -12258,7 +12237,7 @@ def cluster_cohesion_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     # interpreted per-row expressions over a 1-split scan (r15-opt
     # forced-widen A/B: 2.06 s → 1.85 s min-of-3)
     emb = (
-        _t(spark, sf_dir, "embeddings", widen=True, widen_target=8)
+        read_table(spark, sf_dir, "embeddings", widen=True, widen_target=8)
         .select("label", "vec_id", "embedding")
         .where(F.col("label").isNotNull())
     )
@@ -12389,7 +12368,7 @@ def moving_average_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     truncation). Both engines therefore bound identical row sets. ONE
     shuffle (partitionBy user); decimal sum keeps the windowed average
     exact."""
-    ev = _t(spark, sf_dir, "events").where(F.col("event_type") == "purchase")
+    ev = read_table(spark, sf_dir, "events").where(F.col("event_type") == "purchase")
     sec = F.timestamp_diff(
         "SECOND", F.to_timestamp_ntz(F.lit("1970-01-01 00:00:00")), F.col("ts")
     )
@@ -12442,7 +12421,7 @@ def fuzzy_match_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and identical-name pairs would explode quadratically — real entity
     # resolution dedups exact matches first and fuzzy-joins the survivors
     names = (
-        _t(spark, sf_dir, "part")
+        read_table(spark, sf_dir, "part")
         .groupBy("p_name")
         .agg(F.min("p_partkey").alias("p_partkey"))
     )
@@ -12522,7 +12501,7 @@ def cohort_retention_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         cohort_retention,
     )
 
-    events = _t(spark, sf_dir, "events").select("user_id", "ts")
+    events = read_table(spark, sf_dir, "events").select("user_id", "ts")
     return cohort_retention(events)
 
 
@@ -12564,7 +12543,7 @@ def pmi_collocations_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         pmi_collocations,
     )
 
-    docs = _t(spark, sf_dir, "documents", widen=True).select("text")
+    docs = read_table(spark, sf_dir, "documents", widen=True).select("text")
     return pmi_collocations(docs, k=100, min_count=3)
 
 
@@ -12612,7 +12591,7 @@ def zorder_manifest_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         zorder_manifest,
     )
 
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    li = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     return zorder_manifest(li, "l_orderkey", "l_partkey", bits=16, bucket_bits=8)
 
 
@@ -12660,7 +12639,7 @@ def equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         grouped_ntile,
     )
 
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
+    orders = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     bucketed = grouped_ntile(
         orders, [F.asc("o_totalprice"), F.asc("o_orderkey")], 10, "bucket"
     )
@@ -12713,11 +12692,11 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(0, "spark join"), (1, "window agg stream"), (2, "vector scan")],
         "query_id long, query string",
     )
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     text = bm25_topk(docs, queries, k=10).select(
         "query_id", "doc_id", F.col("rank").alias("t_rank")
     )
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = read_table(spark, sf_dir, "embeddings")
     qv = emb.where(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -12803,7 +12782,7 @@ def winsorize_global_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
     global ROW_NUMBER — DuckDB may single-thread, Spark must not."""
     from vacancy_gpt_etl_pipeline_spark.operators.winsorize import winsorize
 
-    orders = _t(spark, sf_dir, "orders").select("o_totalprice")
+    orders = read_table(spark, sf_dir, "orders").select("o_totalprice")
     wdf = winsorize(orders, "o_totalprice", [], lower=0.05, upper=0.95)
     v, lo, hi = F.col("o_totalprice"), F.col("q_lower"), F.col("q_upper")
     agg = wdf.groupBy().agg(
@@ -12883,7 +12862,7 @@ def source_cap_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     are the partition key, so the shuffle is the bounded survivor set,
     never a global sort."""
     cap = 30
-    d = _t(spark, sf_dir, "documents").select("doc_id", "source", "text")
+    d = read_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
     scored = d.select(
         "doc_id", "source", quality_score("text").alias("quality")
     )
@@ -12926,7 +12905,7 @@ def warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shard is the parallelism granule exactly as on Common Crawl
     (one ~1 GB warc.gz per task); parsing is Arrow ``mapInPandas``;
     malformed members quarantine without failing the task."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     recs = read_warc_records(synthesize_warc_payload(docs))
     return (
         recs.where(F.col("warc_type") == "response")
@@ -13023,7 +13002,7 @@ def html_text_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     attributes via regexp_extract_all.  The oracle renders the SAME
     strip chain from the same pattern tables (strip_html_sql), so the
     two engines cannot drift."""
-    docs = _t(spark, sf_dir, "documents").select(
+    docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "source", "lang"
     )
     html = docs.select("doc_id", _doc_html_col().alias("html"))
@@ -13077,7 +13056,7 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape at 100 TB: one corpus word pass, a 1024-row bucket table
     that rides a broadcast join, one map-side-combinable per-doc
     aggregate — no data-sized shuffle beyond the doc_id groupBy."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "text")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
     words = docs.select(
         "doc_id",
         "lang",
@@ -13199,7 +13178,7 @@ def web_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     _SQL_QUALITY), so the hash only matches if WARC framing, payload
     extraction, markup stripping, language voting and the quality
     arithmetic are all exact."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     recs = read_warc_records(synthesize_warc_payload(docs))
     pages = recs.where(
         (F.col("warc_type") == "response") & (F.col("http_status") == 200)
@@ -13289,7 +13268,7 @@ def pdf_text_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     framing, Flate inflation, string-escape decoding AND operator
     ordering are all exact.  Scan widened: per-payload deflate/inflate
     is CPU-dense Python (same rationale as the JPEG entries)."""
-    docs = _t(spark, sf_dir, "documents", widen=True)
+    docs = read_table(spark, sf_dir, "documents", widen=True)
     out = extract_pdf_text(synthesize_pdf_payload(docs))
     return out.select(
         "asset_id",
@@ -13335,7 +13314,7 @@ def epub_chapter_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     40-words-per-chapter layout makes chapter slicing closed-form, so
     the oracle reconstructs index/href/text without opening a zip.
     Scan widened: per-payload deflate/inflate is CPU-dense Python."""
-    docs = _t(spark, sf_dir, "documents", widen=True)
+    docs = read_table(spark, sf_dir, "documents", widen=True)
     return extract_epub_chapters(synthesize_epub_payload(docs)).orderBy(
         "asset_id", "chapter_idx"
     )
@@ -13382,7 +13361,7 @@ def multiformat_ingest_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact.  All three branches are Arrow mapInPandas over
     payload-sized tasks; the union is three scans of the same pruned
     parquet (doc_id/text/source/lang), each filter pushed down."""
-    docs = _t(spark, sf_dir, "documents", widen=True)
+    docs = read_table(spark, sf_dir, "documents", widen=True)
     rid = F.col("doc_id") % 3
     pdf_txt = extract_pdf_text(
         synthesize_pdf_payload(docs.where(rid == 0))
@@ -13473,7 +13452,7 @@ def url_normalize_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         url_host,
     )
 
-    docs = _t(spark, sf_dir, "documents").select(
+    docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "lang"
     )
     sid = F.col("doc_id").cast("string")
@@ -13554,7 +13533,7 @@ def robots_disallow_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays rule synthesis and prefix matching in SQL, so the hash
     certifies the matching semantics (prefix anchored at path start,
     multiple rules per host, rule-free hosts allowed)."""
-    docs = _t(spark, sf_dir, "documents").select(
+    docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "lang"
     )
     sid = F.col("doc_id").cast("string")
@@ -13669,7 +13648,7 @@ def crawl_frontier_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         url_host,
     )
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     cid = F.col("doc_id") - F.col("doc_id") % 3
     cs = cid.cast("string")
     host = F.concat(F.lit("h"), (cid % 16).cast("string"),
@@ -13841,7 +13820,7 @@ def langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # widen: the stopword-vote scorer is a wide regex/token expression
     # evaluated per row behind a 1-split scan; partial aggregation
     # keeps the widened stage map-side (r15-opt A/B: 1.13 s → 0.89 s)
-    docs = _t(spark, sf_dir, "documents", widen=True, widen_target=8).select(
+    docs = read_table(spark, sf_dir, "documents", widen=True, widen_target=8).select(
         "doc_id", "lang", "text"
     )
     cells = (
@@ -13892,105 +13871,47 @@ ORDER BY c.lang, c.lang_pred
 
 
 # --------------------------------------------------------------------------
-# Registry
+# Registry: every query paired with the DuckDB SQL that computes the same
+# rows. tests/test_oracle.py compares each entry against its oracle; the CLI
+# lists the entries and everything else looks them up by name, so the order
+# below is only the listing order.
 # --------------------------------------------------------------------------
 
-# Key order matters: the grading driver oracle-checks only the FIRST ~50
-# registry entries per round. Entries that most need a fresh correctness
-# row go first — round 6 leads with the 19 entries that sat outside the
-# round-5 window (green in r4 + exact-compared every pytest run, but one
-# round stale on the driver) plus every entry that is new or changed in
-# round 6. Entries with a green CORRECTNESS_r05 row absorb the
-# displacement into the tail; tests/test_oracle.py still exact-compares
-# ALL entries with no window.
 REGISTRY: dict[str, QuerySpec] = {
-    # -- stale-in-r5 tail entries (fresh driver rows needed) -------------
-    # a3 leads deliberately: the FIRST bench entry absorbs session warmup
-    # (janino + first scan — measured 11.1 s in-bench vs 3.4 s warm when
-    # dedup_survivor_selection led), so the cheapest query takes the hit
-    "a3_distinct_values": QuerySpec(a3_distinct_values, A3_SQL),
-    "dedup_survivor_selection": QuerySpec(dedup_survivor_selection, _survivor_sql()),
-    "embedding_near_dup": QuerySpec(embedding_near_dup, EMB_NEARDUP_SQL),
-    "ann_brute_force": QuerySpec(ann_brute_force, ANN_SQL),
-    "ann_lsh": QuerySpec(ann_lsh, ANN_LSH_SQL),
-    "ann_ivf": QuerySpec(ann_ivf, ANN_IVF_SQL),
-    "bm25_search": QuerySpec(bm25_search, BM25_SQL),
-    "stratified_sample_docs": QuerySpec(stratified_sample_docs, STRATIFIED_SQL),
-    "pack_sequences_by_source": QuerySpec(pack_sequences_by_source, PACKING_SQL),
-    "asof_attribution": QuerySpec(asof_attribution, ASOF_SQL),
-    "sketch_quantiles": QuerySpec(sketch_quantiles, SKETCH_QUANTILES_SQL),
-    "text_analysis_profile": QuerySpec(text_analysis_profile, TEXT_PROFILE_SQL),
-    "t3_order_by_limit": QuerySpec(t3_order_by_limit, T3_SQL),
-    "t4_truncated_sample": QuerySpec(t4_truncated_sample, T4_SQL),
-    "u1_union_all": QuerySpec(u1_union_all, U1_SQL),
-    "a8_inverted_index": QuerySpec(a8_inverted_index, A8_SQL),
-    "tumbling_window_hourly": QuerySpec(tumbling_window_hourly, TUMBLING_SQL),
-    "sliding_window_half_hour": QuerySpec(sliding_window_half_hour, SLIDING_SQL),
-    "session_windows_per_user": QuerySpec(session_windows_per_user, SESSION_SQL),
-    # -- new or changed in round 6 ---------------------------------------
-    "fuzzy_match_parts": QuerySpec(fuzzy_match_parts, FUZZY_SQL),
-    "moving_average_events": QuerySpec(moving_average_events, MOVING_AVG_SQL),
-    "image_decode": QuerySpec(multimodal_decode, MULTIMODAL_DECODE_SQL),
-    "salted_agg": QuerySpec(salted_hot_key_agg, SALTED_AGG_SQL),
-    "curation_e2e": QuerySpec(curation_pipeline_e2e, CURATION_E2E_SQL),
-    "boilerplate_rm": QuerySpec(boilerplate_removal, BOILERPLATE_SQL),
-    "quality_floor": QuerySpec(
-        adaptive_quality_floor_query, ADAPTIVE_FLOOR_SQL
-    ),
-    "neardup_incr": QuerySpec(
-        incremental_neardup_batch, INCR_NEARDUP_SQL
-    ),
-    "shard_manifest": QuerySpec(shuffle_shard_manifest, SHUFFLE_SHARD_SQL),
-    "nfc_normalize": QuerySpec(unicode_nfc_normalize, UNICODE_NFC_SQL),
-    "audio_decode": QuerySpec(
-        multimodal_audio_decode, MULTIMODAL_AUDIO_SQL
-    ),
-    "warc_ingest": QuerySpec(warc_ingest, WARC_INGEST_SQL),
-    "web_pipeline_e2e": QuerySpec(web_pipeline_e2e, _web_e2e_sql()),
-    "pdf_text_extract": QuerySpec(pdf_text_extract, PDF_TEXT_SQL),
-    "epub_chapter_extract": QuerySpec(
-        epub_chapter_extract, EPUB_CHAPTER_SQL
-    ),
-    "multiformat_ingest_e2e": QuerySpec(
-        multiformat_ingest_e2e, MULTIFORMAT_E2E_SQL
-    ),
-    "url_normalize_filter": QuerySpec(
-        url_normalize_filter, _url_filter_sql()
-    ),
-    "robots_disallow_filter": QuerySpec(
-        robots_disallow_filter, ROBOTS_SQL
-    ),
-    "crawl_frontier_e2e": QuerySpec(
-        crawl_frontier_e2e, CRAWL_FRONTIER_SQL
-    ),
-    "langid_confusion": QuerySpec(langid_confusion, LANGID_CONFUSION_SQL),
-    "html_text_extract": QuerySpec(html_text_extract, HTML_EXTRACT_SQL),
-    "dsir_importance_weights": QuerySpec(
-        dsir_importance_weights, DSIR_SQL
-    ),
-    "flac_audio_decode": QuerySpec(
-        multimodal_flac_audio_decode, MULTIMODAL_FLAC_SQL
-    ),
-    "mp3_frame_census": QuerySpec(
-        multimodal_mp3_census, MULTIMODAL_MP3_SQL
-    ),
-    "aac_adts_census": QuerySpec(
-        multimodal_aac_census, MULTIMODAL_AAC_SQL
-    ),
-    "webp_census": QuerySpec(webp_container_census, WEBP_CENSUS_SQL),
-    "jpeg_exif_census": QuerySpec(jpeg_exif_census, EXIF_CENSUS_SQL),
-    "tiff_census": QuerySpec(tiff_census, TIFF_CENSUS_SQL),
+    "audio_fp_near": QuerySpec(audio_fp_near, AUDIO_FP_NEAR_SQL),
     "tiff_decode": QuerySpec(tiff_decode, TIFF_DECODE_SQL),
     "tiff_decode_lzw": QuerySpec(tiff_decode_lzw, TIFF_DECODE_LZW_SQL),
-    "wds_member_census": QuerySpec(wds_member_census, WDS_MEMBER_SQL),
-    "wds_pax_census": QuerySpec(wds_pax_census, WDS_PAX_SQL),
-    "wds_pack_roundtrip": QuerySpec(
-        wds_pack_roundtrip, WDS_PACK_ROUNDTRIP_SQL
-    ),
     "wds_pack_sized": QuerySpec(wds_pack_sized, WDS_PACK_SIZED_SQL),
-    "wds_roundtrip": QuerySpec(wds_ingest_roundtrip, WDS_ROUNDTRIP_SQL),
-    "wds_multimodal_e2e": QuerySpec(
-        wds_multimodal_e2e, IMAGE_PHASH_DEDUP_SQL
+    "multimodal_dedup_manifest": QuerySpec(
+        multimodal_dedup_manifest, MULTIMODAL_MANIFEST_SQL
+    ),
+    "ann_ivf_pq": QuerySpec(ann_ivf_pq, _ann_ivf_pq_sql()),
+    "ann_ivf_pq_rescore": QuerySpec(
+        ann_ivf_pq_rescore, _ann_ivf_pq_sql(rescore=True)
+    ),
+    "shortest_paths_parts": QuerySpec(shortest_paths_parts, SHORTEST_PATHS_SQL),
+    "rfm_segments": QuerySpec(rfm_segments, RFM_SQL),
+    "semdedup_2level": QuerySpec(
+        semdedup_2level_survivors, SEMDEDUP_2LEVEL_SQL
+    ),
+    "cluster_cohesion_embeddings": QuerySpec(
+        cluster_cohesion_embeddings, CLUSTER_COHESION_SQL
+    ),
+    "weighted_quota_sample": QuerySpec(
+        weighted_quota_sample, WEIGHTED_QUOTA_SQL
+    ),
+    "label_prop_parts": QuerySpec(label_prop_parts, _label_prop_sql()),
+    "video_phash_census": QuerySpec(
+        video_phash_census, VIDEO_PHASH_CENSUS_SQL
+    ),
+    "video_phash_dedup": QuerySpec(
+        video_phash_dedup, VIDEO_PHASH_DEDUP_SQL
+    ),
+    "image_phash_dedup": QuerySpec(
+        image_phash_dedup, IMAGE_PHASH_DEDUP_SQL
+    ),
+    "image_phash_neardup": QuerySpec(
+        image_phash_neardup, IMAGE_PHASH_NEARDUP_SQL
     ),
     "audio_fingerprint_census": QuerySpec(
         audio_fingerprint_census, AUDIO_FP_CENSUS_SQL
@@ -13998,839 +13919,286 @@ REGISTRY: dict[str, QuerySpec] = {
     "audio_fingerprint_dedup": QuerySpec(
         audio_fingerprint_dedup, AUDIO_FP_DEDUP_SQL
     ),
-    "audio_fp_incremental": QuerySpec(
-        audio_fp_incr_gate, AUDIO_FP_INCR_SQL
+    "char_diversity_docs": QuerySpec(char_diversity_docs, CHAR_DIVERSITY_SQL),
+    "embedding_normalize": QuerySpec(embedding_normalize, EMBEDDING_NORMALIZE_SQL),
+    "wds_roundtrip": QuerySpec(wds_ingest_roundtrip, WDS_ROUNDTRIP_SQL),
+    "wds_pax_census": QuerySpec(wds_pax_census, WDS_PAX_SQL),
+    "wds_pack_roundtrip": QuerySpec(
+        wds_pack_roundtrip, WDS_PACK_ROUNDTRIP_SQL
     ),
-    "audio_fp_near": QuerySpec(audio_fp_near, AUDIO_FP_NEAR_SQL),
-    "image_phash_dedup": QuerySpec(
-        image_phash_dedup, IMAGE_PHASH_DEDUP_SQL
+    "ann_brute_force": QuerySpec(ann_brute_force, ANN_SQL),
+    "ann_ivf": QuerySpec(ann_ivf, ANN_IVF_SQL),
+    "ann_lsh": QuerySpec(ann_lsh, ANN_LSH_SQL),
+    "bm25_search": QuerySpec(bm25_search, BM25_SQL),
+    "bpe_pack_docs": QuerySpec(bpe_pack_docs, BPE_PACK_SQL),
+    "bpe_pair_counts": QuerySpec(bpe_pair_counts, BPE_PAIR_SQL),
+    "dedup_survivor_selection": QuerySpec(dedup_survivor_selection, _survivor_sql()),
+    "dsir_importance_weights": QuerySpec(
+        dsir_importance_weights, DSIR_SQL
     ),
-    "image_phash_neardup": QuerySpec(
-        image_phash_neardup, IMAGE_PHASH_NEARDUP_SQL
+    "embedding_near_dup": QuerySpec(embedding_near_dup, EMB_NEARDUP_SQL),
+    "enrich_documents": QuerySpec(enrich_documents, ENRICH_SQL),
+    "epub_chapter_extract": QuerySpec(
+        epub_chapter_extract, EPUB_CHAPTER_SQL
     ),
-    "video_phash_census": QuerySpec(
-        video_phash_census, VIDEO_PHASH_CENSUS_SQL
+    "flac_audio_decode": QuerySpec(
+        multimodal_flac_audio_decode, MULTIMODAL_FLAC_SQL
     ),
-    "video_phash_dedup": QuerySpec(
-        video_phash_dedup, VIDEO_PHASH_DEDUP_SQL
-    ),
-    "video_phash_incremental": QuerySpec(
-        video_phash_incr_gate, VIDEO_PHASH_INCR_SQL
-    ),
-    "multimodal_dedup_manifest": QuerySpec(
-        multimodal_dedup_manifest, MULTIMODAL_MANIFEST_SQL
-    ),
-    "image_phash_incremental": QuerySpec(
-        image_phash_incremental, IMAGE_PHASH_INCR_SQL
-    ),
-    "video_decode": QuerySpec(
-        multimodal_video_decode, MULTIMODAL_VIDEO_SQL
-    ),
-    "mjpeg_video_decode": QuerySpec(
-        multimodal_mjpeg_decode, MJPEG_VIDEO_SQL
-    ),
+    "fuzzy_match_parts": QuerySpec(fuzzy_match_parts, FUZZY_SQL),
+    "html_text_extract": QuerySpec(html_text_extract, HTML_EXTRACT_SQL),
     "jpeg_image_decode": QuerySpec(
         multimodal_jpeg_image_decode, JPEG_IMAGE_SQL
     ),
-    "semdedup": QuerySpec(semdedup_survivors, SEMDEDUP_SQL),
-    "semdedup_incr": QuerySpec(semdedup_incr_survivors, SEMDEDUP_INCR_SQL),
-    "semdedup_2level": QuerySpec(
-        semdedup_2level_survivors, SEMDEDUP_2LEVEL_SQL
+    "langid_confusion": QuerySpec(langid_confusion, LANGID_CONFUSION_SQL),
+    "mjpeg_video_decode": QuerySpec(
+        multimodal_mjpeg_decode, MJPEG_VIDEO_SQL
+    ),
+    "multiformat_ingest_e2e": QuerySpec(
+        multiformat_ingest_e2e, MULTIFORMAT_E2E_SQL
+    ),
+    "pack_sequences_by_source": QuerySpec(pack_sequences_by_source, PACKING_SQL),
+    "robots_disallow_filter": QuerySpec(
+        robots_disallow_filter, ROBOTS_SQL
     ),
     "scd2_history": QuerySpec(scd2_user_state, SCD2_SQL),
-    "cms_frequency": QuerySpec(cms_frequency, CMS_SQL),
-    "pagerank": QuerySpec(pagerank_supplier_parts, _pagerank_sql()),
-    "salted_join": QuerySpec(salted_join_events, SALTED_JOIN_SQL),
-    "q3_shipping_priority": QuerySpec(q3_shipping_priority, Q3_SQL),
-    "q18_large_orders": QuerySpec(q18_large_volume_orders, Q18_SQL),
-    "expectations": QuerySpec(expectations_orders, EXPECTATIONS_SQL),
-    "profile_columns": QuerySpec(profile_orders, PROFILE_SQL),
-    "incr_rollup": QuerySpec(incremental_rollup_events, INCR_ROLLUP_SQL),
-    "windowed_cms": QuerySpec(windowed_cms_daily, WINDOWED_CMS_SQL),
-    "cohort_retention": QuerySpec(cohort_retention_query, COHORT_RETENTION_SQL),
-    "pmi_collocations": QuerySpec(pmi_collocations_query, PMI_SQL),
-    "zorder_manifest": QuerySpec(zorder_manifest_query, _zorder_sql()),
-    "training_prep_pipeline": QuerySpec(training_prep_pipeline, TRAINING_PREP_SQL),
-    # -- new in round-6 session 4 ----------------------------------------
-    # NOTE: the literal order below is the round-6 layout, kept for diff
-    # stability; the EFFECTIVE round-7 order is applied by the _R7_FRONT
-    # rotation after this dict (44 never-driver-checked entries first —
-    # see the rotation comment there). tests/test_oracle.py exact-
-    # compares every entry each run regardless of position.
-    "q5_local_supplier_volume": QuerySpec(q5_local_supplier_volume, Q5_SQL),
-    "snapshot_diff_orders": QuerySpec(snapshot_diff_orders, SNAPSHOT_DIFF_SQL),
-    "triangle_count_parts": QuerySpec(triangle_count_parts, TRIANGLE_SQL),
-    "char_diversity_docs": QuerySpec(char_diversity_docs, CHAR_DIVERSITY_SQL),
-    # -- session-4 entries outside the 50-entry driver window ------------
-    "q14_promo_revenue": QuerySpec(q14_promo_revenue, Q14_SQL),
-    "q17_small_qty_revenue": QuerySpec(q17_small_quantity_revenue, Q17_SQL),
-    "q4_late_shipment_priority": QuerySpec(q4_late_shipment_priority, Q4_SQL),
-    "q22_idle_customer_balance": QuerySpec(q22_idle_customer_balance, Q22_SQL),
-    "winsorize_order_prices": QuerySpec(winsorize_order_prices, WINSORIZE_SQL),
-    "embedding_normalize": QuerySpec(embedding_normalize, EMBEDDING_NORMALIZE_SQL),
-    "mad_outlier_events": QuerySpec(mad_outlier_events, _mad_sql()),
-    "vocab_oov_docs": QuerySpec(vocab_oov_docs, VOCAB_OOV_SQL),
-    "feature_scale_balances": QuerySpec(feature_scale_balances, FEATURE_SCALE_SQL),
-    "top_orders_per_priority": QuerySpec(top_orders_per_priority, TOP_PER_GROUP_SQL),
-    "gapfill_daily_events": QuerySpec(gapfill_daily_events, GAPFILL_SQL),
-    "kfold_docs": QuerySpec(kfold_docs, KFOLD_SQL),
-    "histogram_order_prices": QuerySpec(histogram_order_prices, HISTOGRAM_SQL),
-    "pearson_corr_lineitem": QuerySpec(pearson_corr_lineitem, PEARSON_SQL),
-    "golden_user_profile": QuerySpec(golden_user_profile, GOLDEN_PROFILE_SQL),
-    "grouping_sets_revenue": QuerySpec(grouping_sets_revenue, GROUPING_SETS_SQL),
-    "unpivot_part_measures": QuerySpec(unpivot_part_measures, UNPIVOT_SQL),
-    "skyline_parts": QuerySpec(skyline_parts, SKYLINE_SQL),
-    "ann_incremental_topk": QuerySpec(ann_incremental_topk, ANN_SQL),
-    "sentiment_docs": QuerySpec(sentiment_docs, SENTIMENT_SQL),
-    "ann_ivf_adaptive": QuerySpec(ann_ivf_adaptive, _ivf_adaptive_sql()),
+    "text_analysis_profile": QuerySpec(text_analysis_profile, TEXT_PROFILE_SQL),
+    "train_test_split": QuerySpec(train_test_split, TRAIN_TEST_SPLIT_SQL),
+    "url_normalize_filter": QuerySpec(
+        url_normalize_filter, _url_filter_sql()
+    ),
+    "warc_ingest": QuerySpec(warc_ingest, WARC_INGEST_SQL),
+    "web_pipeline_e2e": QuerySpec(web_pipeline_e2e, _web_e2e_sql()),
+    "tiff_census": QuerySpec(tiff_census, TIFF_CENSUS_SQL),
+    "webp_census": QuerySpec(webp_container_census, WEBP_CENSUS_SQL),
+    "wds_member_census": QuerySpec(wds_member_census, WDS_MEMBER_SQL),
+    "wds_multimodal_e2e": QuerySpec(
+        wds_multimodal_e2e, IMAGE_PHASH_DEDUP_SQL
+    ),
+    "semdedup": QuerySpec(semdedup_survivors, SEMDEDUP_SQL),
+    "a1_full_distinct": QuerySpec(a1_full_distinct, A1_SQL),
+    "a4_frequency": QuerySpec(a4_frequency, A4_SQL),
+    "a6_conditional_agg": QuerySpec(a6_conditional_agg, A6_SQL),
+    "f8_json_extract": QuerySpec(f8_json_extract, F8_SQL),
+    "f9_date_functions": QuerySpec(f9_date_functions, F9_SQL),
+    "f_scalar_functions": QuerySpec(f_scalar_functions, F_SCALAR_SQL),
+    "t2_top_k_by_count": QuerySpec(t2_top_k_by_count, T2_SQL),
     "ann_ivf_int8": QuerySpec(ann_ivf_int8, _ann_ivf_int8_sql()),
+    "bigram_lm_score": QuerySpec(bigram_lm_score, BIGRAM_LM_SQL),
     "bloom_semi_join_orders": QuerySpec(bloom_semi_join_orders, BLOOM_SEMI_SQL),
-    "ann_ivf_pq": QuerySpec(ann_ivf_pq, _ann_ivf_pq_sql()),
-    "ann_ivf_pq_rescore": QuerySpec(
-        ann_ivf_pq_rescore, _ann_ivf_pq_sql(rescore=True)
-    ),
-    "trajectory_similar_users": QuerySpec(
-        trajectory_similar_users, _trajectory_sql()
-    ),
-    "modal_priority_per_status": QuerySpec(modal_priority_per_status, MODE_SQL),
-    "lineage_file_counts": QuerySpec(lineage_file_counts, LINEAGE_SQL),
-    "ntile_price_buckets": QuerySpec(ntile_price_buckets, NTILE_SQL),
-    "monthly_revenue_growth": QuerySpec(monthly_revenue_growth, MOM_GROWTH_SQL),
-    "linear_attribution": QuerySpec(linear_attribution, LINEAR_ATTRIBUTION_SQL),
-    "ab_test_conversion": QuerySpec(ab_test_conversion, AB_TEST_SQL),
-    "kcore_parts": QuerySpec(kcore_parts, _kcore_sql()),
-    "pit_user_state": QuerySpec(pit_user_state, PIT_SQL),
-    "association_rules_brands": QuerySpec(
-        association_rules_brands, ASSOC_RULES_SQL
-    ),
-    "benford_price_digits": QuerySpec(benford_price_digits, BENFORD_SQL),
-    "ewma_daily_events": QuerySpec(ewma_daily_events, EWMA_SQL),
-    "dau_wau_stickiness": QuerySpec(dau_wau_stickiness, DAU_WAU_SQL),
-    "event_transition_matrix": QuerySpec(event_transition_matrix, TRANSITION_SQL),
-    "diff_in_diff_conversion": QuerySpec(diff_in_diff_conversion, DID_SQL),
-    "rfm_segments": QuerySpec(rfm_segments, RFM_SQL),
-    "pareto_revenue_concentration": QuerySpec(
-        pareto_revenue_concentration, PARETO_SQL
-    ),
-    "cohort_ltv_curve": QuerySpec(cohort_ltv_curve, COHORT_LTV_SQL),
-    "orders_with_lines": QuerySpec(orders_with_lines, ORDERS_WITH_LINES_SQL),
-    "growth_accounting_weekly": QuerySpec(
-        growth_accounting_weekly, GROWTH_ACCOUNTING_SQL
-    ),
-    "price_volume_mix": QuerySpec(price_volume_mix, PRICE_VOLUME_SQL),
-    "seasonality_dow_index": QuerySpec(seasonality_dow_index, SEASONALITY_SQL),
-    "order_fulfillment_aging": QuerySpec(order_fulfillment_aging, AGING_SQL),
-    # -- green in r5; most recent first ----------------------------------
+    "budget_mix_docs": QuerySpec(budget_mix_docs, BUDGET_MIX_SQL),
+    "chunk_documents": QuerySpec(chunk_documents_query, CHUNK_SQL),
+    "cube_flags": QuerySpec(cube_flags, CUBE_SQL),
+    "curriculum_order_docs": QuerySpec(curriculum_order_docs, CURRICULUM_SQL),
+    "exact_substr_dedup": QuerySpec(exact_substr_dedup, EXACT_SUBSTR_SQL),
+    "funnel_conversion": QuerySpec(funnel_conversion, FUNNEL_SQL),
+    "merge_upsert_orders": QuerySpec(merge_upsert_orders, MERGE_UPSERT_SQL),
+    "multimodal_metadata": QuerySpec(multimodal_metadata, MULTIMODAL_SQL),
     "ngram_contamination_audit": QuerySpec(
         ngram_contamination_audit, NGRAM_CONTAM_SQL
     ),
-    "bigram_lm_score": QuerySpec(bigram_lm_score, BIGRAM_LM_SQL),
-    "sessionize_events": QuerySpec(sessionize_events, SESSIONIZE_SQL),
-    "funnel_conversion": QuerySpec(funnel_conversion, FUNNEL_SQL),
-    "repetition_profile": QuerySpec(repetition_profile, REPETITION_SQL),
-    "tfidf_keywords": QuerySpec(tfidf_keywords_query, TFIDF_SQL),
-    "weighted_sample_docs": QuerySpec(weighted_sample_docs, WEIGHTED_SAMPLE_SQL),
-    "budget_mix_docs": QuerySpec(budget_mix_docs, BUDGET_MIX_SQL),
-    "bpe_pair_counts": QuerySpec(bpe_pair_counts, BPE_PAIR_SQL),
-    "bpe_token_counts": QuerySpec(bpe_token_counts_docs, BPE_TOKEN_SQL),
-    "bpe_pack_docs": QuerySpec(bpe_pack_docs, BPE_PACK_SQL),
-    "bpe_bytelevel_counts": QuerySpec(
-        bpe_bytelevel_counts_docs, BPE_BYTELEVEL_SQL
+    "ngram_novelty": QuerySpec(ngram_novelty, NGRAM_NOVELTY_SQL),
+    "ntile_price_buckets": QuerySpec(ntile_price_buckets, NTILE_SQL),
+    "pareto_revenue_concentration": QuerySpec(
+        pareto_revenue_concentration, PARETO_SQL
     ),
-    "fix_mojibake_docs": QuerySpec(fix_mojibake_docs, MOJIBAKE_SQL),
-    "bpe_bytelevel_pack": QuerySpec(
-        bpe_bytelevel_pack, BPE_BYTELEVEL_PACK_SQL
-    ),
+    "pii_redaction": QuerySpec(pii_redaction, PII_SQL),
+    "pivot_event_types": QuerySpec(pivot_event_types, PIVOT_SQL),
+    "profile_columns": QuerySpec(profile_orders, PROFILE_SQL),
+    "q11_important_stock": QuerySpec(q11_important_stock, Q11_SQL),
     "quality_classifier_scores": QuerySpec(
         quality_classifier_scores, QUALITY_CLASSIFIER_SQL
     ),
-    "source_kl_divergence": QuerySpec(source_kl_divergence, SOURCE_KL_SQL),
-    "training_mix_e2e": QuerySpec(training_mix_e2e, TRAINING_MIX_E2E_SQL),
-    "cluster_cohesion_embeddings": QuerySpec(
-        cluster_cohesion_embeddings, CLUSTER_COHESION_SQL
-    ),
-    "ngram_novelty": QuerySpec(ngram_novelty, NGRAM_NOVELTY_SQL),
-    "source_ngram_overlap": QuerySpec(source_ngram_overlap, SOURCE_OVERLAP_SQL),
-    "curriculum_order_docs": QuerySpec(curriculum_order_docs, CURRICULUM_SQL),
-    "temperature_mix_docs": QuerySpec(temperature_mix_docs, TEMP_MIX_SQL),
-    "weighted_quota_sample": QuerySpec(
-        weighted_quota_sample, WEIGHTED_QUOTA_SQL
-    ),
-    "fim_transform": QuerySpec(fim_transform_docs, FIM_TRANSFORM_SQL),
-    "text_quality_filter": QuerySpec(text_quality_filter, QUALITY_FILTER_SQL),
-    "train_test_split": QuerySpec(train_test_split, TRAIN_TEST_SPLIT_SQL),
-    "split_contamination": QuerySpec(split_contamination, SPLIT_CONTAMINATION_SQL),
-    "chunk_documents": QuerySpec(chunk_documents_query, CHUNK_SQL),
-    "u3_intersect": QuerySpec(u3_intersect, U3_SQL),
-    "u4_except_all": QuerySpec(u4_except_all, U4_SQL),
-    "multimodal_metadata": QuerySpec(multimodal_metadata, MULTIMODAL_SQL),
-    "merge_upsert_orders": QuerySpec(merge_upsert_orders, MERGE_UPSERT_SQL),
-    "dedup_minhash_lsh": QuerySpec(dedup_minhash_lsh, MINHASH_LSH_SQL),
-    "dedup_simhash": QuerySpec(dedup_simhash, SIMHASH_SQL),
-    "dedup_winnowing": QuerySpec(dedup_winnowing, WINNOWING_SQL),
     "range_join_attribution": QuerySpec(range_join_attribution, RANGE_JOIN_SQL),
-    "sketch_distinct_rollup": QuerySpec(sketch_distinct_rollup, SKETCH_ROLLUP_SQL),
-    "pii_redaction": QuerySpec(pii_redaction, PII_SQL),
-    # -------- window edge: the driver checks the first ~50-52 entries
-    # (r4 checked 52, r5 checked 50), so entries from HERE down may fall
-    # outside it. All have green full-hash CORRECTNESS_r05 rows AND are
-    # re-verified exactly on every pytest run by tests/test_oracle.py.
-    "dedup_exact_documents": QuerySpec(dedup_exact_documents, DEDUP_EXACT_SQL),
-    "exact_substr_dedup": QuerySpec(exact_substr_dedup, EXACT_SUBSTR_SQL),
-    "dedup_ngram_jaccard": QuerySpec(dedup_ngram_jaccard, NGRAM_JACCARD_SQL),
-    "dedup_cc_clusters": QuerySpec(dedup_cc_clusters, CC_CLUSTERS_SQL),
-    "incremental_dedup_batch": QuerySpec(incremental_dedup_batch, INCR_DEDUP_SQL),
-    "enrich_documents": QuerySpec(enrich_documents, ENRICH_SQL),
-    "q1_pricing_summary": QuerySpec(q1_pricing_summary, Q1_SQL),
-    "j1_broadcast_join": QuerySpec(j1_broadcast_join, J1_SQL),
-    "j2_semi_join": QuerySpec(j2_semi_join, J2_SQL),
-    "u2_anti_join": QuerySpec(u2_anti_join, U2_SQL),
-    "a1_full_distinct": QuerySpec(a1_full_distinct, A1_SQL),
-    "a2_keyed_keep_first": QuerySpec(a2_keyed_keep_first, A2_SQL),
-    "a4_frequency": QuerySpec(a4_frequency, A4_SQL),
-    "a6_conditional_agg": QuerySpec(a6_conditional_agg, A6_SQL),
-    "w1_ratio_of_total": QuerySpec(w1_ratio_of_total, W1_SQL),
-    "t2_top_k_by_count": QuerySpec(t2_top_k_by_count, T2_SQL),
-    "f_scalar_functions": QuerySpec(f_scalar_functions, F_SCALAR_SQL),
-    "f8_json_extract": QuerySpec(f8_json_extract, F8_SQL),
-    "f9_date_functions": QuerySpec(f9_date_functions, F9_SQL),
-    "window_rank_lag": QuerySpec(window_rank_lag, WINDOW_SQL),
+    "repetition_profile": QuerySpec(repetition_profile, REPETITION_SQL),
     "rollup_status_priority": QuerySpec(rollup_status_priority, ROLLUP_SQL),
-    "cube_flags": QuerySpec(cube_flags, CUBE_SQL),
-    "pivot_event_types": QuerySpec(pivot_event_types, PIVOT_SQL),
+    "sessionize_events": QuerySpec(sessionize_events, SESSIONIZE_SQL),
+    "source_kl_divergence": QuerySpec(source_kl_divergence, SOURCE_KL_SQL),
+    "source_ngram_overlap": QuerySpec(source_ngram_overlap, SOURCE_OVERLAP_SQL),
+    "split_contamination": QuerySpec(split_contamination, SPLIT_CONTAMINATION_SQL),
+    "temperature_mix_docs": QuerySpec(temperature_mix_docs, TEMP_MIX_SQL),
+    "text_quality_filter": QuerySpec(text_quality_filter, QUALITY_FILTER_SQL),
+    "tfidf_keywords": QuerySpec(tfidf_keywords_query, TFIDF_SQL),
+    "training_mix_e2e": QuerySpec(training_mix_e2e, TRAINING_MIX_E2E_SQL),
+    "video_decode": QuerySpec(
+        multimodal_video_decode, MULTIMODAL_VIDEO_SQL
+    ),
     "ref_q1_top_titles": QuerySpec(ref_q1_top_titles, REF_Q1_SQL),
     "ref_q2_market_share": QuerySpec(ref_q2_market_share, REF_Q2_SQL),
-    # -- new in round 7 --------------------------------------------------
-    "equidepth_histogram": QuerySpec(equidepth_histogram, EQUIDEPTH_SQL),
-    "hybrid_search_rrf": QuerySpec(hybrid_search_rrf, _hybrid_rrf_sql()),
-    "winsorize_global": QuerySpec(winsorize_global_prices, WINSORIZE_GLOBAL_SQL),
-    "source_cap_docs": QuerySpec(source_cap_docs, SOURCE_CAP_SQL),
-    # -- new in round 8 --------------------------------------------------
-    "video_container_metadata": QuerySpec(
-        video_container_metadata, VIDEO_METADATA_SQL
-    ),
-    "rolling_anomaly_events": QuerySpec(
-        rolling_anomaly_events, ROLLING_ANOMALY_SQL
-    ),
-    "embedding_gram": QuerySpec(embedding_gram, EMBEDDING_GRAM_SQL),
-    "label_prop_parts": QuerySpec(label_prop_parts, _label_prop_sql()),
-    "q10_returned_items": QuerySpec(q10_returned_items, Q10_SQL),
-    "q7_volume_shipping": QuerySpec(q7_volume_shipping, Q7_SQL),
+    "q1_pricing_summary": QuerySpec(q1_pricing_summary, Q1_SQL),
+    "q2_min_cost_supplier": QuerySpec(q2_min_cost_supplier, Q2_SQL),
     "q6_forecast_revenue": QuerySpec(q6_forecast_revenue, Q6_SQL),
+    "q7_volume_shipping": QuerySpec(q7_volume_shipping, Q7_SQL),
+    "q8_market_share": QuerySpec(q8_market_share, Q8_SQL),
+    "q9_product_type_profit": QuerySpec(q9_product_type_profit, Q9_SQL),
+    "q10_returned_items": QuerySpec(q10_returned_items, Q10_SQL),
+    "q12_priority_linestatus": QuerySpec(q12_priority_linestatus, Q12_SQL),
     "q13_order_count_distribution": QuerySpec(
         q13_order_count_distribution, Q13_SQL
     ),
     "q15_top_supplier": QuerySpec(q15_top_supplier, Q15_SQL),
+    "q16_supplier_part_variety": QuerySpec(q16_supplier_part_variety, Q16_SQL),
+    "q19_disjunctive_revenue": QuerySpec(q19_disjunctive_revenue, Q19_SQL),
+    "q20_excess_shippers": QuerySpec(q20_excess_shippers, Q20_SQL),
+    "q21_waiting_orders": QuerySpec(q21_waiting_orders, Q21_SQL),
+    "a2_keyed_keep_first": QuerySpec(a2_keyed_keep_first, A2_SQL),
+    "dedup_cc_clusters": QuerySpec(dedup_cc_clusters, CC_CLUSTERS_SQL),
+    "dedup_exact_documents": QuerySpec(dedup_exact_documents, DEDUP_EXACT_SQL),
+    "dedup_ngram_jaccard": QuerySpec(dedup_ngram_jaccard, NGRAM_JACCARD_SQL),
+    "dedup_simhash": QuerySpec(dedup_simhash, SIMHASH_SQL),
+    "dedup_winnowing": QuerySpec(dedup_winnowing, WINNOWING_SQL),
+    "embedding_gram": QuerySpec(embedding_gram, EMBEDDING_GRAM_SQL),
+    "equidepth_histogram": QuerySpec(equidepth_histogram, EQUIDEPTH_SQL),
     "gopher_quality_rules": QuerySpec(gopher_quality_rules, GOPHER_RULES_SQL),
+    "incremental_dedup_batch": QuerySpec(incremental_dedup_batch, INCR_DEDUP_SQL),
+    "j2_semi_join": QuerySpec(j2_semi_join, J2_SQL),
+    "mad_outlier_events": QuerySpec(mad_outlier_events, _mad_sql()),
+    "rolling_anomaly_events": QuerySpec(
+        rolling_anomaly_events, ROLLING_ANOMALY_SQL
+    ),
+    "sketch_distinct_rollup": QuerySpec(sketch_distinct_rollup, SKETCH_ROLLUP_SQL),
+    "source_cap_docs": QuerySpec(source_cap_docs, SOURCE_CAP_SQL),
     "stratified_split_docs": QuerySpec(
         stratified_split_docs, STRATIFIED_SPLIT_SQL
     ),
     "time_weighted_value": QuerySpec(time_weighted_value, TIME_WEIGHTED_SQL),
-    "q8_market_share": QuerySpec(q8_market_share, Q8_SQL),
-    "q19_disjunctive_revenue": QuerySpec(q19_disjunctive_revenue, Q19_SQL),
-    "q2_min_cost_supplier": QuerySpec(q2_min_cost_supplier, Q2_SQL),
-    "q9_product_type_profit": QuerySpec(q9_product_type_profit, Q9_SQL),
-    "q11_important_stock": QuerySpec(q11_important_stock, Q11_SQL),
-    "q12_priority_linestatus": QuerySpec(q12_priority_linestatus, Q12_SQL),
-    "q16_supplier_part_variety": QuerySpec(q16_supplier_part_variety, Q16_SQL),
-    "q20_excess_shippers": QuerySpec(q20_excess_shippers, Q20_SQL),
-    "q21_waiting_orders": QuerySpec(q21_waiting_orders, Q21_SQL),
-    "shortest_paths_parts": QuerySpec(shortest_paths_parts, SHORTEST_PATHS_SQL),
-    # -- new in round 11 --------------------------------------------------
+    "u2_anti_join": QuerySpec(u2_anti_join, U2_SQL),
+    "u3_intersect": QuerySpec(u3_intersect, U3_SQL),
+    "windowed_cms": QuerySpec(windowed_cms_daily, WINDOWED_CMS_SQL),
+    "winsorize_global": QuerySpec(winsorize_global_prices, WINSORIZE_GLOBAL_SQL),
+    "winsorize_order_prices": QuerySpec(winsorize_order_prices, WINSORIZE_SQL),
+    "zorder_manifest": QuerySpec(zorder_manifest_query, _zorder_sql()),
+    "audio_fp_incremental": QuerySpec(
+        audio_fp_incr_gate, AUDIO_FP_INCR_SQL
+    ),
+    "video_phash_incremental": QuerySpec(
+        video_phash_incr_gate, VIDEO_PHASH_INCR_SQL
+    ),
+    "fim_transform": QuerySpec(fim_transform_docs, FIM_TRANSFORM_SQL),
+    "jpeg_exif_census": QuerySpec(jpeg_exif_census, EXIF_CENSUS_SQL),
+    "semdedup_incr": QuerySpec(semdedup_incr_survivors, SEMDEDUP_INCR_SQL),
+    "image_phash_incremental": QuerySpec(
+        image_phash_incremental, IMAGE_PHASH_INCR_SQL
+    ),
+    "mp3_frame_census": QuerySpec(
+        multimodal_mp3_census, MULTIMODAL_MP3_SQL
+    ),
+    "aac_adts_census": QuerySpec(
+        multimodal_aac_census, MULTIMODAL_AAC_SQL
+    ),
+    "ab_test_conversion": QuerySpec(ab_test_conversion, AB_TEST_SQL),
+    "dau_wau_stickiness": QuerySpec(dau_wau_stickiness, DAU_WAU_SQL),
+    "diff_in_diff_conversion": QuerySpec(diff_in_diff_conversion, DID_SQL),
+    "event_transition_matrix": QuerySpec(event_transition_matrix, TRANSITION_SQL),
+    "ewma_daily_events": QuerySpec(ewma_daily_events, EWMA_SQL),
+    "feature_scale_balances": QuerySpec(feature_scale_balances, FEATURE_SCALE_SQL),
+    "gapfill_daily_events": QuerySpec(gapfill_daily_events, GAPFILL_SQL),
+    "golden_user_profile": QuerySpec(golden_user_profile, GOLDEN_PROFILE_SQL),
+    "grouping_sets_revenue": QuerySpec(grouping_sets_revenue, GROUPING_SETS_SQL),
+    "growth_accounting_weekly": QuerySpec(
+        growth_accounting_weekly, GROWTH_ACCOUNTING_SQL
+    ),
+    "histogram_order_prices": QuerySpec(histogram_order_prices, HISTOGRAM_SQL),
+    "hybrid_search_rrf": QuerySpec(hybrid_search_rrf, _hybrid_rrf_sql()),
+    "kcore_parts": QuerySpec(kcore_parts, _kcore_sql()),
+    "kfold_docs": QuerySpec(kfold_docs, KFOLD_SQL),
+    "lineage_file_counts": QuerySpec(lineage_file_counts, LINEAGE_SQL),
+    "linear_attribution": QuerySpec(linear_attribution, LINEAR_ATTRIBUTION_SQL),
+    "modal_priority_per_status": QuerySpec(modal_priority_per_status, MODE_SQL),
+    "monthly_revenue_growth": QuerySpec(monthly_revenue_growth, MOM_GROWTH_SQL),
+    "order_fulfillment_aging": QuerySpec(order_fulfillment_aging, AGING_SQL),
+    "orders_with_lines": QuerySpec(orders_with_lines, ORDERS_WITH_LINES_SQL),
+    "pagerank": QuerySpec(pagerank_supplier_parts, _pagerank_sql()),
+    "pearson_corr_lineitem": QuerySpec(pearson_corr_lineitem, PEARSON_SQL),
+    "pit_user_state": QuerySpec(pit_user_state, PIT_SQL),
+    "price_volume_mix": QuerySpec(price_volume_mix, PRICE_VOLUME_SQL),
+    "q14_promo_revenue": QuerySpec(q14_promo_revenue, Q14_SQL),
+    "q17_small_qty_revenue": QuerySpec(q17_small_quantity_revenue, Q17_SQL),
+    "q22_idle_customer_balance": QuerySpec(q22_idle_customer_balance, Q22_SQL),
+    "q4_late_shipment_priority": QuerySpec(q4_late_shipment_priority, Q4_SQL),
+    "seasonality_dow_index": QuerySpec(seasonality_dow_index, SEASONALITY_SQL),
+    "sentiment_docs": QuerySpec(sentiment_docs, SENTIMENT_SQL),
+    "skyline_parts": QuerySpec(skyline_parts, SKYLINE_SQL),
+    "top_orders_per_priority": QuerySpec(top_orders_per_priority, TOP_PER_GROUP_SQL),
+    "trajectory_similar_users": QuerySpec(
+        trajectory_similar_users, _trajectory_sql()
+    ),
+    "unpivot_part_measures": QuerySpec(unpivot_part_measures, UNPIVOT_SQL),
+    "vocab_oov_docs": QuerySpec(vocab_oov_docs, VOCAB_OOV_SQL),
+    "j1_broadcast_join": QuerySpec(j1_broadcast_join, J1_SQL),
+    "dedup_minhash_lsh": QuerySpec(dedup_minhash_lsh, MINHASH_LSH_SQL),
     "bpe_train_merges": QuerySpec(bpe_train_merges, BPE_TRAIN_SQL),
+    "bpe_train_encode_pack": QuerySpec(
+        bpe_train_encode_pack, BPE_TRAIN_E2E_SQL
+    ),
+    "crawl_frontier_e2e": QuerySpec(
+        crawl_frontier_e2e, CRAWL_FRONTIER_SQL
+    ),
     "bpe_train_merges_incr": QuerySpec(bpe_train_merges_incr, BPE_TRAIN_SQL),
     "bpe_gpt2_prefix_counts": QuerySpec(
         bpe_gpt2_prefix_counts, BPE_GPT2_PREFIX_SQL
     ),
-    "bpe_train_encode_pack": QuerySpec(
-        bpe_train_encode_pack, BPE_TRAIN_E2E_SQL
+    "video_container_metadata": QuerySpec(
+        video_container_metadata, VIDEO_METADATA_SQL
     ),
-}
-
-# ROUND-8 ROTATION (the standing mechanism VERDICT r7 item 1 asked to keep
-# permanent): the driver verifies the FIRST ~50 registry entries each round.
-# Priority order — (a) entries that have never had a driver row
-# (source_cap_docs, added after the r7 check ran, and the new
-# video_container_metadata), (b) every entry whose code or plan changed
-# this round (the ranking-tier rewrite, the sketch lgk pin), then (c) the
-# entries whose most recent driver row is OLDEST (the r5 cohort) so the
-# cumulative driver signal stays fresh across the whole registry.
-_R8_FRONT: tuple[str, ...] = (
-    # (a) never driver-checked
-    "source_cap_docs",
-    "video_container_metadata",
-    "rolling_anomaly_events",
-    "embedding_gram",
-    "q10_returned_items",
-    "q19_disjunctive_revenue",
-    "label_prop_parts",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q6_forecast_revenue",
-    "q13_order_count_distribution",
-    "q15_top_supplier",
-    "gopher_quality_rules",
-    "stratified_split_docs",
-    "time_weighted_value",
-    "q2_min_cost_supplier",
-    "q9_product_type_profit",
-    "q11_important_stock",
-    "q12_priority_linestatus",
-    "q16_supplier_part_variety",
-    "q20_excess_shippers",
-    "q21_waiting_orders",
-    "shortest_paths_parts",
-    # (b) changed in round 8: operators/ranking rewrite + pareto driver-
-    # side crossing + sketch lgk=14 + windowed_cms/zorder oracle hardening
-    "ntile_price_buckets",
-    "rfm_segments",
-    "pareto_revenue_concentration",
-    "equidepth_histogram",
-    "winsorize_global",
-    "winsorize_order_prices",
-    "mad_outlier_events",
-    "sketch_distinct_rollup",
-    "windowed_cms",
-    "zorder_manifest",
-    "video_decode",
-    # (c) oldest driver rows (r5 cohort) — refresh
-    "q1_pricing_summary",
-    "ref_q1_top_titles",
-    "ref_q2_market_share",
-    "enrich_documents",
-    "dedup_exact_documents",
-    "dedup_ngram_jaccard",
-    "dedup_cc_clusters",
-    "incremental_dedup_batch",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "dedup_winnowing",
-    "j1_broadcast_join",
-    "j2_semi_join",
-    "u2_anti_join",
-    "u3_intersect",
-    "a2_keyed_keep_first",
-)
-assert len(_R8_FRONT) == len(set(_R8_FRONT)) == 50
-REGISTRY = {
-    **{name: REGISTRY[name] for name in _R8_FRONT},
-    **{k: v for k, v in REGISTRY.items() if k not in frozenset(_R8_FRONT)},
-}
-
-# ROUND-9 ROTATION (same standing mechanism): (a) the 17 entries added
-# this round, none of which has ever had a driver row — the BPE/token
-# suite, the corpus-audit suite, the quantized ANN tiers, bloom semi-
-# join, exact-substring dedup, and the new MJPEG compressed-video
-# decode; (b) entries whose code or plan changed this round — the
-# enrichment adaptive join-back, deep-BFS checkpointing, the ranking-
-# tier offsets typing fix (its three consumers), the pareto empty-input
-# guard, q11's matched-double threshold, video_decode's container
-# routing, and profile_columns (r8 bench-noise re-measure); then (c)
-# the oldest driver rows (r5 cohort) to keep cumulative freshness.
-_R9_FRONT: tuple[str, ...] = (
-    # (a) never driver-checked (added in round 9)
-    "mjpeg_video_decode",
-    "jpeg_image_decode",
-    "exact_substr_dedup",
-    "ann_ivf_int8",
-    "ann_ivf_pq",
-    "ann_ivf_pq_rescore",
-    "bloom_semi_join_orders",
-    "bpe_pair_counts",
-    "bpe_token_counts",
-    "bpe_pack_docs",
-    "quality_classifier_scores",
-    "source_kl_divergence",
-    "training_mix_e2e",
-    "cluster_cohesion_embeddings",
-    "ngram_novelty",
-    "source_ngram_overlap",
-    "curriculum_order_docs",
-    "temperature_mix_docs",
-    # (b) code or plan changed in round 9
-    "enrich_documents",
-    "shortest_paths_parts",
-    "video_decode",
-    "pareto_revenue_concentration",
-    "q11_important_stock",
-    "ntile_price_buckets",
-    "rfm_segments",
-    "profile_columns",
-    # (c) oldest driver rows (r5 cohort) — refresh
-    "a1_full_distinct",
-    "a4_frequency",
-    "a6_conditional_agg",
-    "bigram_lm_score",
-    "budget_mix_docs",
-    "chunk_documents",
-    "cube_flags",
-    "f8_json_extract",
-    "f9_date_functions",
-    "f_scalar_functions",
-    "funnel_conversion",
-    "merge_upsert_orders",
-    "multimodal_metadata",
-    "ngram_contamination_audit",
-    "pii_redaction",
-    "pivot_event_types",
-    "range_join_attribution",
-    "repetition_profile",
-    "rollup_status_priority",
-    "sessionize_events",
-    "split_contamination",
-    "t2_top_k_by_count",
-    "text_quality_filter",
-    "tfidf_keywords",
-)
-assert len(_R9_FRONT) == len(set(_R9_FRONT)) == 50
-REGISTRY = {
-    **{name: REGISTRY[name] for name in _R9_FRONT},
-    **{k: v for k, v in REGISTRY.items() if k not in frozenset(_R9_FRONT)},
-}
-
-# ROUND-10 ROTATION (same standing mechanism): (a) the 2 entries added
-# this round (byte-level BPE, mojibake repair) — never driver-checked;
-# (b) entries whose code changed this round — the BPE oracle delimiter
-# switch (all three BPE consumers), the JPEG quarantine hardening (all
-# three codec entries), the enrichment docstring/idempotence work, and
-# the two r9 `weak` bench outliers (cms_frequency, scd2_history —
-# re-measure with the interleaved bench) plus semdedup (scale notes);
-# then (c) the r5/r6 driver-row cohort, oldest first, to keep
-# cumulative freshness. 14 entries did not fit the 50-slot front and
-# roll to round 11: q3_shipping_priority, q18_large_orders, expectations,
-# incr_rollup, cohort_retention,
-# pmi_collocations, training_prep_pipeline, q5_local_supplier_volume,
-# snapshot_diff_orders, triangle_count_parts, char_diversity_docs,
-# nfc_normalize, audio_decode, salted_join, shard_manifest,
-# neardup_incr, quality_floor, boilerplate_rm, salted_agg,
-# moving_average_events, image_decode (displaced by the ten
-# web/document-ingestion + eval entries added later in round 10).
-_R10_FRONT: tuple[str, ...] = (
-    # (a) never driver-checked (added in round 10)
-    "warc_ingest",
-    "web_pipeline_e2e",
-    "pdf_text_extract",
-    "epub_chapter_extract",
-    "multiformat_ingest_e2e",
-    "url_normalize_filter",
-    "robots_disallow_filter",
-    "langid_confusion",
-    "html_text_extract",
-    "dsir_importance_weights",
-    "bpe_bytelevel_counts",
-    "fix_mojibake_docs",
-    "flac_audio_decode",
-    "semdedup_2level",
-    "bpe_bytelevel_pack",
-    # (b) code or measurement changed in round 10
-    "bpe_token_counts",
-    "bpe_pair_counts",
-    "bpe_pack_docs",
-    "mjpeg_video_decode",
-    "jpeg_image_decode",
-    "video_container_metadata",
-    "enrich_documents",
-    "cms_frequency",
-    "scd2_history",
-    "semdedup",
-    # (c) stale driver rows (r5 cohort, then r6), oldest first
-    "weighted_sample_docs",
-    "train_test_split",
-    "u4_except_all",
-    "w1_ratio_of_total",
-    "window_rank_lag",
-    "a3_distinct_values",
-    "dedup_survivor_selection",
-    "embedding_near_dup",
-    "ann_brute_force",
-    "ann_lsh",
-    "ann_ivf",
-    "bm25_search",
-    "stratified_sample_docs",
-    "pack_sequences_by_source",
-    "asof_attribution",
-    "sketch_quantiles",
-    "text_analysis_profile",
-    "t3_order_by_limit",
-    "t4_truncated_sample",
-    "u1_union_all",
-    "a8_inverted_index",
-    "tumbling_window_hourly",
-    "sliding_window_half_hour",
-    "session_windows_per_user",
-    "fuzzy_match_parts",
-)
-assert len(_R10_FRONT) == len(set(_R10_FRONT)) == 50
-REGISTRY = {
-    **{name: REGISTRY[name] for name in _R10_FRONT},
-    **{k: v for k, v in REGISTRY.items() if k not in frozenset(_R10_FRONT)},
-}
-
-# Round-12 rotation: (a) the two entries that have never had a driver
-# row (added in round 11) plus this round's new flagship, (b) entries
-# whose code, oracle, or plan changed this round, (c) the 21-entry
-# cohort whose last driver-green row is round 6 (five rounds stale),
-# then (d) the oldest of the round-7 cohort to fill 50.
-_R12_FRONT: tuple[str, ...] = (
-    # (a) never driver-checked
-    "bpe_train_merges",
-    "bpe_train_encode_pack",
-    "crawl_frontier_e2e",
-    "bpe_train_merges_incr",
-    "bpe_gpt2_prefix_counts",
-    "mp3_frame_census",
-    "aac_adts_census",
-    "image_phash_dedup",
-    "image_phash_neardup",
-    "audio_fingerprint_census",
-    "audio_fingerprint_dedup",
-    "video_phash_census",
-    "video_phash_dedup",
-    "multimodal_dedup_manifest",
-    "image_phash_incremental",
-    # (b) code/oracle touched in round 12 (SEP-boundary symmetry,
-    # (?s) dot-matches-newline oracles, degenerate-sizing guard,
-    # unescaped-EOL normalization, stsd codec census)
-    "video_container_metadata",
-    "semdedup",
-    "semdedup_2level",
-    "pdf_text_extract",
-    "bpe_token_counts",
-    "bpe_bytelevel_counts",
-    "bpe_bytelevel_pack",
-    "fix_mojibake_docs",
-    # (c) last driver-green in round 6
-    "audio_decode",
-    "boilerplate_rm",
-    "char_diversity_docs",
-    "cohort_retention",
-    "expectations",
-    "image_decode",
-    "incr_rollup",
-    "moving_average_events",
-    "neardup_incr",
-    "nfc_normalize",
-    "pmi_collocations",
-    "q18_large_orders",
-    "q3_shipping_priority",
-    "q5_local_supplier_volume",
-    "quality_floor",
-    "salted_agg",
-    "salted_join",
-    "shard_manifest",
-    "snapshot_diff_orders",
-    "training_prep_pipeline",
-    "triangle_count_parts",
-    # (d) oldest round-7 cohort entries
-    "ann_incremental_topk",
-    "ann_ivf_adaptive",
-    "association_rules_brands",
-    "benford_price_digits",
-    "cohort_ltv_curve",
-    "curation_e2e",
-)
-assert len(_R12_FRONT) == len(set(_R12_FRONT)) == 50
-REGISTRY = {
-    **{name: REGISTRY[name] for name in _R12_FRONT},
-    **{k: v for k, v in REGISTRY.items() if k not in frozenset(_R12_FRONT)},
-}
-
-# Round-13 rotation (r12 verdict item 1 — sweep the driver-stale
-# tail): (a) entries whose code, oracle, or plan changed this round
-# (manifest near tier, semdedup auto two-level routing, pHash
-# batch-leg cap, ID3v2.4 unsync boundary), then (b) the FULL 36-entry
-# cohort whose last driver-green row is round 7 (five rounds stale),
-# then (c) the oldest round-8 entries to fill 50. The remaining 34
-# round-8 entries are the r14 front.
-_R13_FRONT: tuple[str, ...] = (
-    # (a) new in round 13, then code/oracle touched in round 13
-    "webp_census",
-    "wds_member_census",
-    "wds_roundtrip",
-    "wds_multimodal_e2e",
-    "semdedup_incr",
-    "jpeg_exif_census",
-    "multimodal_dedup_manifest",
-    "image_phash_incremental",
-    "semdedup",
-    "semdedup_2level",
-    "mp3_frame_census",
-    "aac_adts_census",
-    # (b) last driver-green in round 7
-    "ab_test_conversion",
-    "dau_wau_stickiness",
-    "diff_in_diff_conversion",
-    "embedding_normalize",
-    "event_transition_matrix",
-    "ewma_daily_events",
-    "feature_scale_balances",
-    "gapfill_daily_events",
-    "golden_user_profile",
-    "grouping_sets_revenue",
-    "growth_accounting_weekly",
-    "histogram_order_prices",
-    "hybrid_search_rrf",
-    "kcore_parts",
-    "kfold_docs",
-    "lineage_file_counts",
-    "linear_attribution",
-    "modal_priority_per_status",
-    "monthly_revenue_growth",
-    "order_fulfillment_aging",
-    "orders_with_lines",
-    "pagerank",
-    "pearson_corr_lineitem",
-    "pit_user_state",
-    "price_volume_mix",
-    "q14_promo_revenue",
-    "q17_small_qty_revenue",
-    "q22_idle_customer_balance",
-    "q4_late_shipment_priority",
-    "seasonality_dow_index",
-    "sentiment_docs",
-    "skyline_parts",
-    "top_orders_per_priority",
-    "trajectory_similar_users",
-    "unpivot_part_measures",
-    "vocab_oov_docs",
-    # (c) oldest round-8 cohort entries
-    "j1_broadcast_join",
-    "dedup_minhash_lsh",
-)
-assert len(_R13_FRONT) == len(set(_R13_FRONT)) == 50
-REGISTRY = {
-    **{name: REGISTRY[name] for name in _R13_FRONT},
-    **{k: v for k, v in REGISTRY.items() if k not in frozenset(_R13_FRONT)},
-}
-
-# Round-14 rotation (r13 verdict item 1 — finish the stale tail): the
-# FULL 40-entry cohort whose last driver-green row is round 8, led by
-# the reference correctness contract (ref_q1/ref_q2) and the entry()
-# flagship (q1_pricing_summary) — after this front, no registry entry's
-# driver evidence is older than round 9 — plus (b) the four entries
-# NEW this round and (c) the six whose code or oracle changed this
-# round (exif fixture classes, semdedup guard/countDistinct, manifest
-# image-branch restructure, wds walker pax/whole-shard-quarantine).
-_R14_FRONT: tuple[str, ...] = (
-    # (a) the r8-stale cohort — reference contract first
-    "ref_q1_top_titles",
-    "ref_q2_market_share",
-    "q1_pricing_summary",
-    "q2_min_cost_supplier",
-    "q6_forecast_revenue",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q9_product_type_profit",
-    "q10_returned_items",
-    "q12_priority_linestatus",
-    "q13_order_count_distribution",
-    "q15_top_supplier",
-    "q16_supplier_part_variety",
-    "q19_disjunctive_revenue",
-    "q20_excess_shippers",
-    "q21_waiting_orders",
-    "a2_keyed_keep_first",
-    "dedup_cc_clusters",
-    "dedup_exact_documents",
-    "dedup_ngram_jaccard",
-    "dedup_simhash",
-    "dedup_winnowing",
-    "embedding_gram",
-    "equidepth_histogram",
-    "gopher_quality_rules",
-    "incremental_dedup_batch",
-    "j2_semi_join",
-    "label_prop_parts",
-    "mad_outlier_events",
-    "rolling_anomaly_events",
-    "sketch_distinct_rollup",
-    "source_cap_docs",
-    "stratified_split_docs",
-    "time_weighted_value",
-    "u2_anti_join",
-    "u3_intersect",
-    "windowed_cms",
-    "winsorize_global",
-    "winsorize_order_prices",
-    "zorder_manifest",
-    # (b) new in round 14
-    "wds_pax_census",
-    "wds_pack_roundtrip",
-    "audio_fp_incremental",
-    "video_phash_incremental",
-    "weighted_quota_sample",
-    "fim_transform",
-    # (c) code/oracle touched in round 14 (wds_member_census /
-    # webp_census / wds_multimodal_e2e also saw walker code but their
-    # oracles+fixtures are unchanged, r13 driver evidence is fresh, and
-    # wds_pax_census exercises the same walker more strictly;
-    # semdedup / semdedup_2level ended the round byte-identical to
-    # their r13-driver-green code after the measured A/B revert —
-    # all covered by the committed self-attestations)
-    "jpeg_exif_census",
-    "semdedup_incr",
-    "multimodal_dedup_manifest",
-    "wds_roundtrip",
-)
-assert len(_R14_FRONT) == len(set(_R14_FRONT)) == 50
-REGISTRY = {
-    **{name: REGISTRY[name] for name in _R14_FRONT},
-    **{k: v for k, v in REGISTRY.items() if k not in frozenset(_R14_FRONT)},
-}
-
-# Round-15 rotation (r14 verdict item 1 — clear the LAST stale cohort):
-# (a) tiff_census (added after the r14 front froze — never
-# driver-checked) and the five entries whose code was touched in r14
-# without a fresh driver row, then (b) the FULL 44-entry cohort whose
-# last driver-green row is round 9. After this front, no registry
-# entry's driver evidence is older than round 11. Entries whose code
-# changed in r15 but already hold r14 driver rows (weighted_quota_sample
-# — overflow-proof hash + scoped materialization, oracle hash attested
-# unchanged; the wds_* family — new malformed-input guards and pax `g`
-# offset attribution that no fixture exercises; multimodal_dedup_manifest
-# — the new image_tiff/audio_near/video_near legs), plus the four
-# entries NEW in r15 (tiff_decode, tiff_decode_lzw, wds_pack_sized,
-# audio_fp_near — added after this front's 50 slots were fixed by the
-# r14 verdict's enumeration), are covered by this round's committed
-# ORACLE_SELF attestations at both SFs and are first in line for the
-# r16 front.
-_R15_FRONT: tuple[str, ...] = (
-    # (a) never-checked + r14-code-touched without a fresh driver row
-    "tiff_census",
-    "webp_census",
-    "wds_member_census",
-    "wds_multimodal_e2e",
-    "semdedup",
-    "semdedup_2level",
-    # (b) the r9 cohort — everything whose driver evidence is round 9
-    "a1_full_distinct",
-    "a4_frequency",
-    "a6_conditional_agg",
-    "f8_json_extract",
-    "f9_date_functions",
-    "f_scalar_functions",
-    "t2_top_k_by_count",
-    "ann_ivf_int8",
-    "ann_ivf_pq",
-    "ann_ivf_pq_rescore",
-    "bigram_lm_score",
-    "bloom_semi_join_orders",
-    "budget_mix_docs",
-    "chunk_documents",
-    "cluster_cohesion_embeddings",
-    "cube_flags",
-    "curriculum_order_docs",
-    "exact_substr_dedup",
-    "funnel_conversion",
-    "merge_upsert_orders",
-    "multimodal_metadata",
-    "ngram_contamination_audit",
-    "ngram_novelty",
-    "ntile_price_buckets",
-    "pareto_revenue_concentration",
-    "pii_redaction",
-    "pivot_event_types",
-    "profile_columns",
-    "q11_important_stock",
-    "quality_classifier_scores",
-    "range_join_attribution",
-    "repetition_profile",
-    "rfm_segments",
-    "rollup_status_priority",
-    "sessionize_events",
-    "shortest_paths_parts",
-    "source_kl_divergence",
-    "source_ngram_overlap",
-    "split_contamination",
-    "temperature_mix_docs",
-    "text_quality_filter",
-    "tfidf_keywords",
-    "training_mix_e2e",
-    "video_decode",
-)
-assert len(_R15_FRONT) == len(set(_R15_FRONT)) == 50
-REGISTRY = {
-    **{name: REGISTRY[name] for name in _R15_FRONT},
-    **{k: v for k, v in REGISTRY.items() if k not in frozenset(_R15_FRONT)},
-}
-
-# Round-16 rotation (r15 verdict item 10): (a) the four entries added in
-# r15 AFTER its front froze — never driver-checked; (b) every entry
-# whose code changed in r16 (this optimization round's touches need
-# fresh driver rows even where r15 rows exist); (c) the r15-code-touched
-# entries without a fresh driver row (the widen family, the wds walker
-# guards, weighted_quota_sample's overflow fix, label_prop_parts'
-# edges_canonical); (d) 27 of the 42-entry cohort whose last driver
-# evidence is round 11. The 16 r11 entries that did not fit the 50-slot
-# front (a3_distinct_values, a8_inverted_index, asof_attribution,
-# cms_frequency, session_windows_per_user, sketch_quantiles,
-# sliding_window_half_hour, stratified_sample_docs, t3_order_by_limit,
-# t4_truncated_sample, tumbling_window_hourly, u1_union_all,
-# u4_except_all, w1_ratio_of_total, window_rank_lag,
-# weighted_sample_docs — relational/window/sampling entries whose code
-# is unchanged since well before round 11) stay
-# covered by the committed ORACLE_SELF attestations and are first in
-# line for the r17 front.
-_R16_FRONT: tuple[str, ...] = (
-    # (a) never driver-checked (added in r15 after its front froze)
-    "audio_fp_near",
-    "tiff_decode",
-    "tiff_decode_lzw",
-    "wds_pack_sized",
-    # (b) code touched in r16
-    "multimodal_dedup_manifest",
-    "ann_ivf_pq",
-    "ann_ivf_pq_rescore",
-    "shortest_paths_parts",
-    "rfm_segments",
-    "semdedup_2level",
-    "cluster_cohesion_embeddings",
-    # (c) r15-code-touched without a fresh driver row
-    "weighted_quota_sample",
-    "label_prop_parts",
-    "video_phash_census",
-    "video_phash_dedup",
-    "image_phash_dedup",
-    "image_phash_neardup",
-    "audio_fingerprint_census",
-    "audio_fingerprint_dedup",
-    "char_diversity_docs",
-    "embedding_normalize",
-    "wds_roundtrip",
-    "wds_pax_census",
-    "wds_pack_roundtrip",
-    # (d) the round-11 cohort (27 of 42 fit)
-    "ann_brute_force",
-    "ann_ivf",
-    "ann_lsh",
-    "bm25_search",
-    "bpe_pack_docs",
-    "bpe_pair_counts",
-    "dedup_survivor_selection",
-    "dsir_importance_weights",
-    "embedding_near_dup",
-    "enrich_documents",
-    "epub_chapter_extract",
-    "flac_audio_decode",
-    "fuzzy_match_parts",
-    "html_text_extract",
-    "jpeg_image_decode",
-    "langid_confusion",
-    "mjpeg_video_decode",
-    "multiformat_ingest_e2e",
-    "pack_sequences_by_source",
-    "robots_disallow_filter",
-    "scd2_history",
-    "text_analysis_profile",
-    "train_test_split",
-    "url_normalize_filter",
-    "warc_ingest",
-    "web_pipeline_e2e",
-)
-assert len(_R16_FRONT) == len(set(_R16_FRONT)) == 50
-REGISTRY = {
-    **{name: REGISTRY[name] for name in _R16_FRONT},
-    **{k: v for k, v in REGISTRY.items() if k not in frozenset(_R16_FRONT)},
+    "pdf_text_extract": QuerySpec(pdf_text_extract, PDF_TEXT_SQL),
+    "bpe_token_counts": QuerySpec(bpe_token_counts_docs, BPE_TOKEN_SQL),
+    "bpe_bytelevel_counts": QuerySpec(
+        bpe_bytelevel_counts_docs, BPE_BYTELEVEL_SQL
+    ),
+    "bpe_bytelevel_pack": QuerySpec(
+        bpe_bytelevel_pack, BPE_BYTELEVEL_PACK_SQL
+    ),
+    "fix_mojibake_docs": QuerySpec(fix_mojibake_docs, MOJIBAKE_SQL),
+    "audio_decode": QuerySpec(
+        multimodal_audio_decode, MULTIMODAL_AUDIO_SQL
+    ),
+    "boilerplate_rm": QuerySpec(boilerplate_removal, BOILERPLATE_SQL),
+    "cohort_retention": QuerySpec(cohort_retention_query, COHORT_RETENTION_SQL),
+    "expectations": QuerySpec(expectations_orders, EXPECTATIONS_SQL),
+    "image_decode": QuerySpec(multimodal_decode, MULTIMODAL_DECODE_SQL),
+    "incr_rollup": QuerySpec(incremental_rollup_events, INCR_ROLLUP_SQL),
+    "moving_average_events": QuerySpec(moving_average_events, MOVING_AVG_SQL),
+    "neardup_incr": QuerySpec(
+        incremental_neardup_batch, INCR_NEARDUP_SQL
+    ),
+    "nfc_normalize": QuerySpec(unicode_nfc_normalize, UNICODE_NFC_SQL),
+    "pmi_collocations": QuerySpec(pmi_collocations_query, PMI_SQL),
+    "q18_large_orders": QuerySpec(q18_large_volume_orders, Q18_SQL),
+    "q3_shipping_priority": QuerySpec(q3_shipping_priority, Q3_SQL),
+    "q5_local_supplier_volume": QuerySpec(q5_local_supplier_volume, Q5_SQL),
+    "quality_floor": QuerySpec(
+        adaptive_quality_floor_query, ADAPTIVE_FLOOR_SQL
+    ),
+    "salted_agg": QuerySpec(salted_hot_key_agg, SALTED_AGG_SQL),
+    "salted_join": QuerySpec(salted_join_events, SALTED_JOIN_SQL),
+    "shard_manifest": QuerySpec(shuffle_shard_manifest, SHUFFLE_SHARD_SQL),
+    "snapshot_diff_orders": QuerySpec(snapshot_diff_orders, SNAPSHOT_DIFF_SQL),
+    "training_prep_pipeline": QuerySpec(training_prep_pipeline, TRAINING_PREP_SQL),
+    "triangle_count_parts": QuerySpec(triangle_count_parts, TRIANGLE_SQL),
+    "ann_incremental_topk": QuerySpec(ann_incremental_topk, ANN_SQL),
+    "ann_ivf_adaptive": QuerySpec(ann_ivf_adaptive, _ivf_adaptive_sql()),
+    "association_rules_brands": QuerySpec(
+        association_rules_brands, ASSOC_RULES_SQL
+    ),
+    "benford_price_digits": QuerySpec(benford_price_digits, BENFORD_SQL),
+    "cohort_ltv_curve": QuerySpec(cohort_ltv_curve, COHORT_LTV_SQL),
+    "curation_e2e": QuerySpec(curation_pipeline_e2e, CURATION_E2E_SQL),
+    "cms_frequency": QuerySpec(cms_frequency, CMS_SQL),
+    "weighted_sample_docs": QuerySpec(weighted_sample_docs, WEIGHTED_SAMPLE_SQL),
+    "u4_except_all": QuerySpec(u4_except_all, U4_SQL),
+    "w1_ratio_of_total": QuerySpec(w1_ratio_of_total, W1_SQL),
+    "window_rank_lag": QuerySpec(window_rank_lag, WINDOW_SQL),
+    "a3_distinct_values": QuerySpec(a3_distinct_values, A3_SQL),
+    "stratified_sample_docs": QuerySpec(stratified_sample_docs, STRATIFIED_SQL),
+    "asof_attribution": QuerySpec(asof_attribution, ASOF_SQL),
+    "sketch_quantiles": QuerySpec(sketch_quantiles, SKETCH_QUANTILES_SQL),
+    "t3_order_by_limit": QuerySpec(t3_order_by_limit, T3_SQL),
+    "t4_truncated_sample": QuerySpec(t4_truncated_sample, T4_SQL),
+    "u1_union_all": QuerySpec(u1_union_all, U1_SQL),
+    "a8_inverted_index": QuerySpec(a8_inverted_index, A8_SQL),
+    "tumbling_window_hourly": QuerySpec(tumbling_window_hourly, TUMBLING_SQL),
+    "sliding_window_half_hour": QuerySpec(sliding_window_half_hour, SLIDING_SQL),
+    "session_windows_per_user": QuerySpec(session_windows_per_user, SESSION_SQL),
 }
 
 
@@ -14839,4 +14207,4 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    return {name: spec.oracle for name, spec in REGISTRY.items() if spec.oracle}
+    return {name: spec.oracle for name, spec in REGISTRY.items()}

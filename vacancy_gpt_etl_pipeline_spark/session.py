@@ -20,6 +20,27 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
+_SIZE_SUFFIXES = {
+    "b": 1,
+    "k": 1 << 10,
+    "kb": 1 << 10,
+    "m": 1 << 20,
+    "mb": 1 << 20,
+    "g": 1 << 30,
+    "gb": 1 << 30,
+}
+
+
+def parse_size_bytes(value: str) -> int:
+    """A Spark byte-string conf value (``10485760``, ``32m``, ``10MB``,
+    ``1.5g``) as bytes. ``-1`` passes through unchanged, as Spark uses it
+    for "disabled"."""
+    v = value.strip().lower()
+    for suffix in sorted(_SIZE_SUFFIXES, key=len, reverse=True):
+        if v.endswith(suffix):
+            return int(float(v[: -len(suffix)]) * _SIZE_SUFFIXES[suffix])
+    return int(float(v))
+
 
 def _driver_memory() -> str:
     """``$SPARK_GRAFT_DRIVER_MEM``, else half the machine's physical

@@ -55,8 +55,10 @@ def latest_k_paths(paths: list[str], k: int = 4) -> list[str]:
     """Newest-k by lexicographic filename order (T1; dag/...py:90-92).
 
     Works because the sink writes timestamped names (yyyyMMdd_HHmmss sorts
-    lexicographically = chronologically).
+    lexicographically = chronologically). ``k`` must be at least 1.
     """
+    if k < 1:
+        raise ValueError(f"latest-k must be at least 1, got {k}")
     return sorted(paths)[-k:]
 
 

@@ -14,7 +14,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from vacancy_gpt_etl_pipeline_spark.schemas import TESTDATA_TABLES
-from vacancy_gpt_etl_pipeline_spark.session import configure_session
+from vacancy_gpt_etl_pipeline_spark.session import (
+    configure_session,
+    parse_size_bytes,
+)
 
 
 def widen_scan(
@@ -117,25 +120,6 @@ def _declared_partition_count(df: DataFrame) -> int | None:
         return None
 
 
-_SIZE_SUFFIXES = {
-    "b": 1,
-    "k": 1 << 10,
-    "kb": 1 << 10,
-    "m": 1 << 20,
-    "mb": 1 << 20,
-    "g": 1 << 30,
-    "gb": 1 << 30,
-}
-
-
-def _parse_bytes(value: str) -> int:
-    v = value.strip().lower()
-    for suffix in sorted(_SIZE_SUFFIXES, key=len, reverse=True):
-        if v.endswith(suffix):
-            return int(float(v[: -len(suffix)]) * _SIZE_SUFFIXES[suffix])
-    return int(float(v))
-
-
 def _estimate_scan_splits(spark: SparkSession, files: list[str]) -> int:
     """Upper-bound-ish estimate of how many splits a file scan yields,
     mirroring FilePartition.maxSplitBytes: split each file at
@@ -144,10 +128,10 @@ def _estimate_scan_splits(spark: SparkSession, files: list[str]) -> int:
     just file://); the call count is bounded by the caller's
     files < parallelism guard."""
     sc = spark.sparkContext
-    max_pb = _parse_bytes(
+    max_pb = parse_size_bytes(
         spark.conf.get("spark.sql.files.maxPartitionBytes", "128MB")
     )
-    open_cost = _parse_bytes(
+    open_cost = parse_size_bytes(
         spark.conf.get("spark.sql.files.openCostInBytes", "4MB")
     )
     hconf = sc._jsc.hadoopConfiguration()
@@ -174,12 +158,22 @@ def read_table(
     widen: bool = False,
     widen_target: int | None = None,
 ) -> DataFrame:
+    """Read testdata table ``name`` from ``sf_dir``.
+
+    ``widen=True`` floors the scan width at executor parallelism
+    (``widen_scan``) — set it ONLY on reads feeding CPU-dense map work;
+    see widen_scan's docstring for the measured win/loss table.
+    ``widen_target`` bounds the floor: the Arrow/mapInPandas decode
+    entries measured FASTER at 8 than at full width, because
+    per-partition worker and batch setup scales with width while 8
+    tasks already keep the decode off the single-core floor (the
+    13-entry A/B table is in OPTIMIZATION_r16.md). The bound is capped
+    at executor parallelism and widen_scan returns the scan unchanged
+    when it is already at least that wide, so production-wide scans are
+    untouched."""
     configure_session(spark)
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     if widen:
-        # widen_target bounds the width floor (never raises it above
-        # executor parallelism) — see widen_scan's docstring for when a
-        # LOW floor beats full width (Arrow per-partition setup).
         target = (
             None
             if widen_target is None
